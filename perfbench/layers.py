@@ -76,10 +76,6 @@ def sql_metrics_since(spark, after_id: int) -> dict[str, float]:
     return out
 
 
-def group_jobs(sc, group: str) -> list[int]:
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def stage_metrics(sc, job_ids) -> dict[str, float]:
     """Sum the completed-stage metrics of ``job_ids`` (each stage once)."""
     tracker = sc.statusTracker()

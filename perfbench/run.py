@@ -265,8 +265,9 @@ class Queries:
         first_exec = layers.last_execution_id(spark)
         ops = [self.op(spark, data_dir, n, tag=str(i)) for i, n in enumerate(order)]
         layers.drain(sc)
-        build_jobs = [j for i in range(len(order)) for j in layers.group_jobs(sc, f"build/{i}")]
-        exec_jobs = [j for i in range(len(order)) for j in layers.group_jobs(sc, f"exec/{i}")]
+        tracker = sc.statusTracker()
+        build_jobs = [j for i in range(len(order)) for j in tracker.getJobIdsForGroup(f"build/{i}")]
+        exec_jobs = [j for i in range(len(order)) for j in tracker.getJobIdsForGroup(f"exec/{i}")]
         m = dict.fromkeys(PER_LAYER_UNITS, 0.0)
         m.update(layers.stage_metrics(sc, exec_jobs))
         m.update(layers.sql_metrics_since(spark, first_exec))
