@@ -49,11 +49,12 @@ def last_execution_id(spark) -> int:
     return execs.apply(n - 1).executionId() if n else -1
 
 
-def sql_metrics_since(spark, after_id: int) -> dict[str, float]:
-    """Sum the SQL node metrics in ``SQL_METRICS`` over every SQL execution
-    with an id above ``after_id``."""
+def sql_metrics_since(spark, after_id: int, wanted: dict[str, str] = SQL_METRICS) -> dict[str, float]:
+    """Sum the SQL node metrics named in ``wanted`` (SQL metric name ->
+    per-layer metric) over every SQL execution with an id above
+    ``after_id``."""
     store = spark._jsparkSession.sharedState().statusStore()
-    out = {v: 0.0 for v in SQL_METRICS.values()}
+    out = dict.fromkeys(wanted.values(), 0.0)
     execs = store.executionsList()
     for i in range(execs.size()):
         ex = execs.apply(i)
@@ -63,8 +64,8 @@ def sql_metrics_since(spark, after_id: int) -> dict[str, float]:
         it = ex.metrics().iterator()
         while it.hasNext():
             m = it.next()
-            if m.name() in SQL_METRICS:
-                names[m.accumulatorId()] = SQL_METRICS[m.name()]
+            if m.name() in wanted:
+                names[m.accumulatorId()] = wanted[m.name()]
         if not names:
             continue
         it = store.executionMetrics(ex.executionId()).iterator()

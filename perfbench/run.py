@@ -10,10 +10,11 @@ One closed-loop client runs one workload in one process on
 An op is one registry query, timed from the ``spec.fn`` call to the end of
 ``collect()`` and checked against the value hash of the entry's DuckDB
 oracle. A pass runs every entry of the workload once, in an order drawn
-from ``--seed``; whole passes run until ``--seconds`` of op time. The last
-stdout line is one JSON object; the line before it is the run's full
-record (environment, host noise, set-up phases, every op). ``--trace 1``
-reports the per-layer metrics of one traced pass instead (see README.md).
+from ``--seed``. ``--seconds`` fixes the number of whole passes, so every
+run of a workload times the same ops. The last stdout line is one JSON
+object; the line before it is the run's full record (environment, host
+noise, set-up phases, every op). ``--trace 1`` reports the per-layer
+metrics of one traced pass and a streaming replay instead (see README.md).
 
     python3 perfbench/run.py --workload headline_sf01 --seed 1 --seconds 15 --trace 0
     python3 perfbench/run.py --workload all --seed 1    # table of every workload
@@ -22,7 +23,9 @@ reports the per-layer metrics of one traced pass instead (see README.md).
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
+import math
 import os
 import random
 import shutil
@@ -44,20 +47,17 @@ PYTHON_UDF = [
     "ext_compression_ratio", "ext_mm_features", "ext_mm_decode", "ext_mm_resize",
     "ext_mm_audio", "ext_mm_spectral", "ev_stateful_user_totals",
 ]
-WORKLOADS = ("headline_sf01", "python_udf")
-E2E_UNITS = {
-    "setup_s": "s", "throughput_per_s": "1/s", "latency_p50_s": "s", "latency_p75_s": "s",
-}
-PER_LAYER_UNITS = {
-    "session.start_s": "s", "catalog.register_s": "s",
-    "build.s": "s", "build.jobs": "count", "build.job_share": "share",
-    "plan.s": "s", "exec.s": "s", "exec.jobs": "count", "exec.stages": "count",
-    "exec.tasks": "count", "exec.task_run_s": "s", "exec.task_cpu_s": "s", "exec.gc_s": "s",
-    "exec.shuffle_read_bytes": "B", "exec.shuffle_write_bytes": "B", "exec.spill_bytes": "B",
-    "exec.input_bytes": "B", "result.rows": "count",
-    "python.sent_bytes": "B", "python.returned_bytes": "B", "python.run_s": "s",
-    "python.worker_start_s": "s", "trace.overhead_share": "share",
-}
+# Steady pass time on 4 CPUs; a run times ceil(--seconds / PASS_S) passes.
+PASS_S = {"headline_sf01": 13.0, "python_udf": 7.5}
+WORKLOADS = tuple(PASS_S)
+
+
+def metric_units() -> tuple[dict, dict]:
+    """Units of the end-to-end and per-layer metrics, by name, as
+    BENCHMARK.json declares them."""
+    spec = json.loads((ROOT / "BENCHMARK.json").read_text())
+    return ({m["name"]: m["unit"] for m in spec["end_to_end"]},
+            {m["name"]: m["unit"] for m in spec["per_layer"]})
 
 
 def import_engine():
@@ -243,17 +243,11 @@ class Queries:
             self.op(spark, data_dir, name)
         self.warm_s = time.perf_counter() - t0
 
-    def timed(self, spark, data_dir: Path, seconds: float, seed: int) -> list[dict]:
-        """Whole passes until ``seconds`` of op time."""
-        ops, elapsed, k = [], 0.0, 0
-        while elapsed < seconds:
-            for name in self.order(seed, k):
-                ops.append(self.op(spark, data_dir, name))
-                elapsed += ops[-1]["latency_s"]
-            k += 1
-        return ops
+    def timed(self, spark, data_dir: Path, passes: int, seed: int) -> list[dict]:
+        return [self.op(spark, data_dir, name)
+                for k in range(passes) for name in self.order(seed, k)]
 
-    def traced(self, spark, data_dir: Path, seed: int) -> tuple[dict, list[dict]]:
+    def traced(self, spark, data_dir: Path, seed: int, units: dict) -> tuple[dict, list[dict]]:
         """One untraced and one traced pass in the same order; the traced
         pass's layer metrics and the overhead between the two."""
         import layers
@@ -268,7 +262,7 @@ class Queries:
         tracker = sc.statusTracker()
         build_jobs = [j for i in range(len(order)) for j in tracker.getJobIdsForGroup(f"build/{i}")]
         exec_jobs = [j for i in range(len(order)) for j in tracker.getJobIdsForGroup(f"exec/{i}")]
-        m = dict.fromkeys(PER_LAYER_UNITS, 0.0)
+        m = dict.fromkeys(units, 0.0)
         m.update(layers.stage_metrics(sc, exec_jobs))
         m.update(layers.sql_metrics_since(spark, first_exec))
         n_jobs = len(build_jobs) + len(exec_jobs)
@@ -306,10 +300,11 @@ def versions(spark) -> dict:
 
 
 def dataset() -> Path:
-    """The generated tables, made once per checkout and reused."""
+    """The generated tables, made once per checkout and generator version."""
     import datagen
 
-    data_dir = HERE / ".work" / f"data-sf{SF}-seed{DATA_SEED}"
+    version = hashlib.sha256((HERE / "datagen.py").read_bytes()).hexdigest()[:12]
+    data_dir = HERE / ".work" / f"data-sf{SF}-seed{DATA_SEED}-{version}"
     if not (data_dir / "region.parquet").exists():
         tmp = data_dir.with_name(f"{data_dir.name}.{os.getpid()}")
         datagen.generate(str(tmp), DATA_SEED, SF)
@@ -318,6 +313,7 @@ def dataset() -> Path:
 
 
 def run(args) -> int:
+    e2e_units, layer_units = metric_units()
     import_engine()
     run_dir = HERE / ".work" / f"run-{os.getpid()}"
     shutil.rmtree(run_dir, ignore_errors=True)
@@ -344,18 +340,24 @@ def run(args) -> int:
         wl.warm_up(spark, data_dir)
         phase("warm_up_s")
         if args.trace:
-            metrics, ops = wl.traced(spark, data_dir, args.seed)
+            import replay
+
+            metrics, ops = wl.traced(spark, data_dir, args.seed, layer_units)
             metrics["session.start_s"] = statistics.median(session.start_s)
             metrics["catalog.register_s"] = statistics.median(session.register_s)
-            units = PER_LAYER_UNITS
+            stream_metrics, stream_ops = replay.replay(spark, data_dir, run_dir / "replay", args.seed)
+            metrics.update(stream_metrics)
+            ops += stream_ops
+            units = layer_units
         else:
-            ops = wl.timed(spark, data_dir, args.seconds, args.seed)
+            passes = math.ceil(args.seconds / PASS_S[args.workload])
+            ops = wl.timed(spark, data_dir, passes, args.seed)
             latency = [o["latency_s"] for o in ops]
             p50, p75 = quartiles(latency)
             metrics = {"setup_s": session.median_s() + wl.warm_s,
                        "throughput_per_s": len(latency) / sum(latency),
                        "latency_p50_s": p50, "latency_p75_s": p75}
-            units = E2E_UNITS
+            units = e2e_units
         env = versions(spark)
         phase("measure_s")
     finally:
@@ -384,7 +386,7 @@ def run(args) -> int:
 
 def run_all(args) -> int:
     """Run every workload in its own process and print one table."""
-    print(f"{'workload':<15}" + "".join(f"{k:>20}" for k in (*E2E_UNITS, "error_share")))
+    print(f"{'workload':<15}" + "".join(f"{k:>20}" for k in (*metric_units()[0], "error_share")))
     for w in WORKLOADS:
         cmd = [sys.executable, __file__, "--workload", w, "--seed", str(args.seed),
                "--seconds", str(args.seconds), "--trace", "0"]
