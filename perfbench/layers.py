@@ -43,6 +43,18 @@ def drain(sc) -> None:
     sc._jsc.sc().listenerBus().waitUntilEmpty()
 
 
+def compile_counters(spark) -> dict[str, float]:
+    """Whole-stage codegen compiles (Janino, one per generated-code cache
+    miss) and the JVM's JIT compile time so far. Both run beside the tasks
+    on the same CPUs, so a pass that recompiles its generated code competes
+    with its own execution."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return {"exec.codegen_compiles": float(compiles.getCount()),
+            "exec.jit_compile_s": jit.getTotalCompilationTime() / 1e3}
+
+
 def last_execution_id(spark) -> int:
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     n = execs.size()

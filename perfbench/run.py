@@ -9,9 +9,10 @@ One closed-loop client runs one workload in one process on
 
 An op is one registry query, timed from the ``spec.fn`` call to the end of
 ``collect()`` and checked against the value hash of the entry's DuckDB
-oracle. A pass runs every entry of the workload once, in an order drawn
-from ``--seed``. ``--seconds`` fixes the number of whole passes, so every
-run of a workload times the same ops. The last stdout line is one JSON
+oracle. A pass runs every entry of the workload once, in one order drawn
+from ``--seed`` and kept for every pass of the run, the warm-up pass
+included. ``--seconds`` fixes the number of whole passes, so every run of
+a workload times the same ops. The last stdout line is one JSON
 object; the line before it is the run's full record (environment, host
 noise, set-up phases, every op). ``--trace 1`` reports the per-layer
 metrics of one traced pass and a streaming replay instead (see README.md).
@@ -41,7 +42,7 @@ ROOT = HERE.parent
 sys.path.insert(0, str(HERE))
 
 SF = 0.1
-DATA_SEED = 42  # the tables are fixed; --seed draws the pass orders
+DATA_SEED = 42  # the tables are fixed; --seed draws the pass order
 SETUPS = 3  # set-ups per run; setup_s takes their median
 PYTHON_UDF = [
     "ext_compression_ratio", "ext_mm_features", "ext_mm_decode", "ext_mm_resize",
@@ -175,10 +176,18 @@ class Session:
 
 
 class Queries:
-    """A workload of registry queries, one pass = each entry once."""
+    """A workload of registry queries, one pass = each entry once.
 
-    def __init__(self, names: list[str]):
+    Every pass of a run keeps the order drawn from the seed. Spark caches
+    the classes it generates for each plan, and a pass needs more of them
+    than the cache holds, so how many are compiled again depends on the
+    order of the previous pass. With a fresh order per pass that count,
+    and with it each pass's time, would vary with the order; a repeated
+    order recompiles the same classes every pass."""
+
+    def __init__(self, names: list[str], seed: int):
         self.names = names
+        self.order = random.Random(f"order/{seed}").sample(names, len(names))
         self.expected: dict[str, str] = {}
         self.warm_s = 0.0
 
@@ -233,31 +242,29 @@ class Queries:
                    rows=len(rows), ok=digest(df.columns, rows) == self.expected[name])
         return rec
 
-    def order(self, seed: int, k: int) -> list[str]:
-        return random.Random(f"{seed}/{k}").sample(self.names, len(self.names))
-
     def warm_up(self, spark, data_dir: Path) -> None:
         """One untimed pass; its time is part of ``setup_s``."""
         t0 = time.perf_counter()
-        for name in sorted(self.names):
+        for name in self.order:
             self.op(spark, data_dir, name)
         self.warm_s = time.perf_counter() - t0
 
-    def timed(self, spark, data_dir: Path, passes: int, seed: int) -> list[dict]:
-        return [self.op(spark, data_dir, name)
-                for k in range(passes) for name in self.order(seed, k)]
+    def timed(self, spark, data_dir: Path, passes: int) -> list[dict]:
+        return [self.op(spark, data_dir, name) for _ in range(passes) for name in self.order]
 
-    def traced(self, spark, data_dir: Path, seed: int, units: dict) -> tuple[dict, list[dict]]:
+    def traced(self, spark, data_dir: Path, units: dict) -> tuple[dict, list[dict]]:
         """One untraced and one traced pass in the same order; the traced
         pass's layer metrics and the overhead between the two."""
         import layers
 
         sc = spark.sparkContext
-        order = self.order(seed, 0)
+        order = self.order
         plain = [self.op(spark, data_dir, n) for n in order]
         layers.drain(sc)
         first_exec = layers.last_execution_id(spark)
+        compiles_before = layers.compile_counters(spark)
         ops = [self.op(spark, data_dir, n, tag=str(i)) for i, n in enumerate(order)]
+        compiles = {k: v - compiles_before[k] for k, v in layers.compile_counters(spark).items()}
         layers.drain(sc)
         tracker = sc.statusTracker()
         build_jobs = [j for i in range(len(order)) for j in tracker.getJobIdsForGroup(f"build/{i}")]
@@ -265,6 +272,7 @@ class Queries:
         m = dict.fromkeys(units, 0.0)
         m.update(layers.stage_metrics(sc, exec_jobs))
         m.update(layers.sql_metrics_since(spark, first_exec))
+        m.update(compiles)
         n_jobs = len(build_jobs) + len(exec_jobs)
         m.update({
             "build.s": sum(o.get("build_s", 0.0) for o in ops),
@@ -280,12 +288,12 @@ class Queries:
         return m, plain + ops
 
 
-def make_workload(name: str) -> Queries:
+def make_workload(name: str, seed: int) -> Queries:
     from bigdatacw1_spark.queries import REGISTRY
 
     names = (sorted(n for n, s in REGISTRY.items() if s.headline)
              if name == "headline_sf01" else PYTHON_UDF)
-    return Queries(names)
+    return Queries(names, seed)
 
 
 def versions(spark) -> dict:
@@ -330,7 +338,7 @@ def run(args) -> int:
     phase("start_s")  # imports, host probes and the generated tables
     session = Session(run_dir, data_dir)
     try:
-        wl = make_workload(args.workload)
+        wl = make_workload(args.workload, args.seed)
         wl.prepare(data_dir)  # oracle answers come before set-up, untimed
         phase("prepare_s")
         for _ in range(SETUPS):
@@ -342,7 +350,7 @@ def run(args) -> int:
         if args.trace:
             import replay
 
-            metrics, ops = wl.traced(spark, data_dir, args.seed, layer_units)
+            metrics, ops = wl.traced(spark, data_dir, layer_units)
             metrics["session.start_s"] = statistics.median(session.start_s)
             metrics["catalog.register_s"] = statistics.median(session.register_s)
             stream_metrics, stream_ops = replay.replay(spark, data_dir, run_dir / "replay", args.seed)
@@ -351,7 +359,7 @@ def run(args) -> int:
             units = layer_units
         else:
             passes = math.ceil(args.seconds / PASS_S[args.workload])
-            ops = wl.timed(spark, data_dir, passes, args.seed)
+            ops = wl.timed(spark, data_dir, passes)
             latency = [o["latency_s"] for o in ops]
             p50, p75 = quartiles(latency)
             metrics = {"setup_s": session.median_s() + wl.warm_s,
