@@ -14,26 +14,15 @@ from bigdatacw1_spark.queries import finance_suite  # noqa: F401  (FX + trader l
 from bigdatacw1_spark.queries import pipeline_suite  # noqa: F401  (Mongo-dialect stages)
 
 # ---------------------------------------------------------------------------
-# Driver correctness-window rotation.
+# Driver correctness window.
 #
-# The round driver oracle-checks the FIRST 50 registry entries, in order.
-# Rounds 1-2 covered the ref_* ports + the p/j/a/w/set/f operator micros;
-# round 3 covered TPC-H + the ev_* event-time suite + wh_* lifecycle + the
-# finance entries; round 4 covered the ext_* LLM-pipeline namespace —
-# 50/50 green every round (CORRECTNESS_r01-r04), 140 distinct entries.
-# The 5 reference ports stay pinned first as the permanent parity anchor;
-# everything else keeps its registration order after the priority block
-# (locally oracle-checked every run by tests/test_parity.py, which
-# iterates the FULL registry).
-#
-# Round 5 rotates onto the ROUND5 staging list from round 4 (crawl
-# ingestion, media codecs, sketches, drift, governance, verified ANN/
-# SimHash promotions) — 45 first-time entries behind the 5 pinned
-# ref_* anchors. Rounds 6-9 below stage the remaining never-checked
-# tail so every future rotation is a one-line swap: at the START of
-# round N, set _DRIVER_WINDOW = _ANCHORS + ROUND{N}_WINDOW (and append
-# any entries ADDED during round N to the last staged list in the same
-# commit that registers them).
+# The round driver oracle-checks the FIRST 50 registry entries, in order:
+# the 5 reference ports pinned as the permanent parity anchor, then the
+# live window. Every other entry keeps its registration order. Past
+# windows are drained: each entry's driver verdict is in some
+# CORRECTNESS_r*.json, and tests/test_parity.py asserts that those files
+# plus the live window cover the whole registry. To rotate, point
+# _DRIVER_WINDOW at a new list of at most 45 oracle-bearing entries.
 # ---------------------------------------------------------------------------
 _ANCHORS = [
     # reference parity anchor (driver-green r1-r4; keep pinned)
@@ -42,204 +31,6 @@ _ANCHORS = [
     "ref_sql2_portfolio",
     "ref_nosql2_screening",
     "ref_nosql2_hof",
-]
-
-# ---------------------------------------------------------------------------
-# Round 6 live window: the micro-operator tails + diagnostics + raw ANN
-# staged by round 5 (CORRECTNESS_r05.json holds the round-5 verdicts for
-# the previous window's 45 entries; they leave the live window covered).
-# ---------------------------------------------------------------------------
-ROUND6_WINDOW = [
-    # scalar-function micro-suite tail
-    "f5_hof_filter", "f6_element_at", "f_regexp", "f10_histogram",
-    "f11_array_ops", "f12_string_distance", "f13_unpivot",
-    "f14_map_functions", "f15_from_json_struct", "f15_statistical_fns",
-    "f16_quantile_binning", "f17_variant_json", "f18_try_functions",
-    "f19_collation", "f23_listagg", "f24_sql_udf", "f28_recursive_bom",
-    "f29_from_csv",
-    # aggregate micro-suite tail
-    "a13_grouping_sets", "a14_stats_moments", "a15_exact_percentiles",
-    "a16_iqr_outliers", "a17_regression", "a18_pivot_api",
-    # window micro-suite tail
-    "w7_first_last_nth", "w8_topk_per_group", "w9_cume_dist_lead",
-    # join micro-suite tail
-    "j8b_asof_tolerance", "j10_orphan_audit", "j11_range_band_join",
-    "j12_binned_range_join", "j13_fuzzy_name_join", "j15_lateral_topn",
-    # set ops + lateral
-    "set_except_all", "set_intersect_all", "set_union_by_name",
-    "p10_lateral_topk",
-    # diagnostics
-    "diag_key_skew", "diag_profile", "diag_join_size",
-    "diag_observed_metrics", "diag_ann_recall",
-    # ANN raw top-k surfaces
-    "ext_ann_lsh_topk", "ext_ann_multiprobe", "ext_ann_ivf_topk",
-]
-
-# ---------------------------------------------------------------------------
-# Staged future rotations. Together with the 230 entries driver-checked by
-# the end of round 6, these cover the entire registry; entries ADDED during
-# round 6+ get appended to the last window (or a new one) in the same
-# commit that registers them. Each list is validated against REGISTRY by
-# tests/test_parity.py so a rename fails CI, not the driver.
-# ---------------------------------------------------------------------------
-ROUND7_WINDOW = [
-    # ANN verified + embedding analytics
-    "ext_ann_pq_topk", "ext_ann_ivf_verified", "ext_ann_pq_verified",
-    "ext_semantic_dedup", "ext_semantic_dedup_verified", "ext_embed_pca",
-    "ext_embed_mahalanobis", "ext_cluster_quality", "ext_dedup_keep_best",
-    # retrieval / tokenizer stack
-    "ext_bm25_topk", "ext_hybrid_rrf", "ext_bpe_tokenize", "ext_bpe_train",
-    "ext_bpe_train_apply", "ext_tokenizer_fertility", "ext_feature_hash",
-    "ext_label_encode", "ext_readability",
-    # corpus assembly tail
-    "ext_domain_cap", "ext_token_budget_mix", "ext_repeat_epochs",
-    "ext_mix_temperature", "ext_curriculum_stages", "ext_active_learning",
-    "ext_dsir_select", "ext_lsh_admission", "ext_provenance",
-    "ext_compression_ratio", "ext_mojibake_fix", "ext_l_diversity",
-    "ext_dp_count_release",
-    # media + crawl tail
-    "ext_mm_jpeg", "ext_mm_jpeg_color", "ext_mm_video_frames",
-    "ext_robots_filter", "ext_warc_datasource",
-    # graph tail
-    "ext_dedup_clusters_jump", "ext_kcore", "ext_lpa_communities",
-    # misc extraction
-    "ext_variant_extract", "ext_fuzzy_match", "ext_skyline_parts",
-    # event-time tail (first half)
-    "ev_tumbling_distinct_users", "ev_ewma", "ev_seasonal_dow",
-]
-
-ROUND8_WINDOW = [
-    # event-time tail (second half)
-    "ev_anomaly_seasonal", "ev_window_funnel", "ev_pattern_match",
-    "ev_holt_forecast", "ev_lateness_audit", "ev_rate_limit",
-    # warehouse analytics tail
-    "wh_ivm_join_delta", "wh_bitemporal_lookup", "wh_cuped_adjusted",
-    "wh_survival_km", "wh_association_rules", "wh_abc_analysis",
-    "wh_rfm_segments", "wh_journey_ngrams", "wh_attribution_touch",
-    "wh_cdc_apply", "wh_zorder_layout", "wh_hilbert_layout",
-    "wh_compaction_plan", "wh_time_to_convert", "wh_fifo_allocation",
-    "wh_file_stats", "wh_bt_preference",
-    # finance scalar tail
-    "f25_historical_var", "f26_max_drawdown", "f27_beta_covariance",
-    # Mongo-dialect pipeline suite
-    "pl_setwindowfields", "pl_unionwith", "pl_facet", "pl_sortbycount",
-    "pl_graphlookup", "pl_expr_suite", "pl_densify_fill",
-    # round-5 additions (first batch)
-    "ext_unimax_mix", "ext_quality_calibration", "ext_mm_resize",
-    "ext_mm_audio_decimate", "ext_quality_logreg", "ext_coreset_kcenter",
-    "ext_quality_eval", "ext_winnowing_pairs", "ext_corpus_funnel",
-    # round-7 overflow pulled forward from ROUND11 (judge spot-checked
-    # green at sf0.01 in the round-7 verdict) to fill the 45-entry cap
-    # and drain the staged backlog one round sooner
-    "ev_hampel_filter", "wh_runs_test", "wh_growth_accounting",
-]
-
-ROUND9_WINDOW = [
-    # r8's only driver red, retried after the oracle HUGEINT->BIGINT fix
-    # (warehouse.py: CAST(monetary_cents AS BIGINT); the Spark side was
-    # correct — see VERDICT.md r8 "What's wrong" #1). Its slot is paid for
-    # by moving ext_temporal_eval_split to ROUND11_WINDOW.
-    "wh_rfm_segments",
-    # round-5 additions (second batch: trained models, eval metrics,
-    # example assembly, layout audit, IVM, backtest)
-    "ext_el2n_difficulty", "ext_pair_bleu", "wh_skipping_effectiveness",
-    "ext_retrieval_ndcg", "wh_ivm_agg_delta", "ev_forecast_backtest",
-    "ext_nb_langid", "ext_mlm_masking", "ext_span_corruption",
-    "ext_containment_pairs", "ext_hard_negatives", "ext_ccnet_terciles",
-    "ext_cluster_topics", "ev_cusum_changepoint", "ext_neyman_allocation", "wh_attribution_markov", "wh_diff_in_diff", "ext_tfidf_cosine_pairs", "ext_link_graph_rank", "ext_pmi_collocations", "ext_zipf_fit", "wh_gini_concentration", "ev_anomaly_mad", "ev_seasonal_strength", "f30_bitwise_agg", "wh_benford_check", "ev_autocorrelation", "p11_exists_anti_exists", "wh_hhi_concentration", "ext_langid_confusion", "wh_lead_time", "ext_dedup_method_agreement", "wh_dau_mau_stickiness", "f32_group_by_all", "wh_conversion_wilson", "ext_jaccard_threshold_curve", "ext_minhash_estimate_verified", "ext_shuffle_order",
-    # round-6 additions (fill to the 45 cap)
-    "wh_ivm_joinagg_delta", "wh_bucketed_colocated_join", "wh_table_checksum",
-    "ext_jsonl_corrupt_audit", "ext_embed_sq8", "ext_spdx_license_tag",
-]
-
-ROUND10_WINDOW: list[str] = [
-    # overflow for round-6+ additions once ROUND9 hits the 45-entry cap
-    "ev_theil_sen", "wh_ivm_minmax_delta", "ext_ngram_novelty",
-    "ext_metadata_mi", "ext_mm_scene_cut", "j16_null_safe_join",
-    "p12_not_in_subquery_nulls", "a19_boolean_aggs", "ext_grid_proximity_join",
-    "ext_mm_phash_neardup", "w10_interval_range_frame", "f33_parse_url",
-    "ext_phash_admission", "ext_mm_vad", "ext_mm_letterbox_crop",
-    # round-7 additions
-    "wh_ivm_minmax_full", "ext_mm_flac", "ext_ann_binary_rerank",
-    "wh_ivm_topk_delta", "ev_ohlc_bars", "ext_ngram_repetition",
-    "ext_doc_chunking", "wh_ivm_topk_full", "wh_ivm_zset_join",
-    "ext_golden_record", "ev_calendar_weeks", "ev_slo_burn_rate",
-    "ext_winsorize_outliers", "ev_peak_concurrency", "ev_kalman_1d",
-    "ev_mtbf_mttr", "ext_mmr_rerank", "wh_weighted_median",
-    "ev_sax_words", "ev_esd_outliers", "ext_jl_projection",
-    "ev_dtw_distance", "ext_rr_frequency", "ev_spc_rules",
-    "ext_hill_tail_index", "ev_burst_kleinberg", "j14_bloom_join",
-    "ext_rendezvous_sharding", "diag_range_shards", "f34_business_days",
-]
-
-ROUND11_WINDOW: list[str] = [
-    # staging list for round-8+ additions (its original 3 round-7
-    # overflow entries were pulled forward into ROUND8_WINDOW)
-    "wh_shapley_attribution", "wh_uplift_stratified",
-    "ev_poisson_rate_test", "ev_holt_winters",
-    "f35_bitmap_distinct", "ext_maxsim_topk", "ext_kn_bigram_lm",
-    # round-8 additions: statistical-inference tail
-    "wh_mann_whitney", "wh_chi_square", "wh_poisson_bootstrap",
-    "wh_conformal_intervals", "wh_sprt_sequential",
-    # round-8 additions: mining / eval / linkage / sampling / multimodal
-    "ext_margin_mining", "ext_matryoshka_fidelity", "ext_token_f1_pairs",
-    "ext_fs_linkage", "ext_rejection_sample_length", "ext_mm_patchify",
-    "ext_stratified_kfold", "ev_periodogram",
-    # round-8 additions: causal + linkage completion
-    "wh_ipw_ate", "ext_sorted_neighborhood",
-    # round-8 additions: classical-experimentation completion
-    "wh_welch_ttest", "wh_bh_fdr", "wh_power_mde", "wh_psm_att",
-    # round-8 additions: time-series econometrics
-    "ev_hurst_rs", "ev_adf_stationarity", "ev_pinball_loss",
-    # round-8 additions: link prediction + agreement
-    "ext_adamic_adar", "ext_cohen_kappa", "ext_hits_scores",
-    # round-8 additions: codecs + wire formats
-    "ext_mm_ulaw", "ext_avro_roundtrip", "ext_mm_tiff",
-    # round-8 additions: multi-rater agreement, lead-lag, aggregation audit
-    "ext_krippendorff_alpha", "ev_cross_correlation", "wh_simpsons_check",
-    # round-8 additions: LCS-based summarization metric
-    "ext_rouge_l_pairs",
-    # round-8 additions: decomposition strengths + crawl partitioning keys
-    "ev_stl_strength", "ext_surt_keys",
-    # displaced from ROUND9_WINDOW to pay for the wh_rfm_segments retry
-    # slot (fills ROUND11 toward the 45 cap)
-    "ext_temporal_eval_split",
-    # round-9 additions: classical-stats completion (fills ROUND11 to 45)
-    "wh_anova_oneway", "wh_effect_sizes", "wh_g_test",
-]
-
-ROUND12_WINDOW: list[str] = [
-    # round-9 additions: classical-stats completion (overflow)
-    "wh_spearman_corr", "wh_kruskal_wallis", "wh_levene_test",
-    "wh_nelson_aalen",
-    # round-9 additions: technical-analysis / sequential-drift series ops
-    "ev_bollinger_bands", "ev_stochastic_oscillator", "ev_gk_volatility",
-    "ev_sharpe_sortino", "ev_rolling_median", "ev_page_hinkley",
-    "ev_rsi_wilder", "ev_macd",
-    # round-9 additions: lakehouse merge-on-read
-    "wh_deletion_vector_scan",
-    # round-9 additions: corpus text analytics + eval metrics
-    "ext_distinct_n", "ext_boilerplate_lines", "ext_unicode_scripts",
-    "ext_chi2_terms", "ext_log_odds_terms", "ext_fleiss_kappa",
-    "ext_watermark_zscore", "ext_err_metric", "ext_chrf_pairs",
-    # round-9 additions: graph / privacy / assembly / crawl
-    "ext_link_pred_scores", "ext_bipartite_project", "ext_t_closeness",
-    "ext_length_bucket_batches", "ext_crawl_frontier",
-    # round-9 additions: real codecs + wire formats
-    "ext_mm_alaw", "ext_protobuf_roundtrip", "ext_mm_qoi", "ext_mm_adpcm",
-    # round-9 additions: cointegration, positional IR, bitmap planning
-    "ev_engle_granger", "ext_phrase_search", "ext_roaring_stats",
-    "ext_lsh_band_planner",
-    # round-9 additions: multiple-testing FWER + AR-order diagnostics
-    "wh_holm_bonferroni", "ev_pacf",
-    # round-9 additions: residual-whiteness test + PRF query expansion
-    "ev_ljung_box", "ext_rocchio_prf",
-    # round-9 additions: factorial ANOVA (main effects + interaction)
-    "wh_two_way_anova",
-    # round-10 additions (capped at 5 per the r9 verdict backlog bound:
-    # 85 staged + 5 = 90; these fill ROUND12 to the 45-entry cap)
-    "ev_mann_kendall", "ev_garch_vol", "wh_cmh_test", "ext_rle_bitpack",
-    "ext_cdc_chunking",
 ]
 
 ROUND13_WINDOW: list[str] = [
@@ -277,17 +68,6 @@ ROUND13_WINDOW: list[str] = [
     "ext_kmeans_verified",
 ]
 
-# Round 13 live window (swapped in as the first commit of round 13, per
-# the round-12 verdict's item 1). Composition documented on
-# ROUND13_WINDOW above: the 10 staged round-11/12 additions (pre-verified
-# by the round-12 509/509 dtype-strict sf0.01 sweep and the committed
-# sf0.001 full suite), the four round-12 plan-changed queries, and 31
-# consumers of the operator paths round 13's optimizations touch — all
-# 35 of those carry prior driver verdicts (CORRECTNESS_r01-r12) and are
-# re-verified here under the changed plans. After this round the staged
-# backlog is EMPTY: every registry entry has a driver verdict in some
-# CORRECTNESS_r*.json (asserted by tests/test_parity.py's coverage
-# check).
 _DRIVER_WINDOW = _ANCHORS + ROUND13_WINDOW
 
 

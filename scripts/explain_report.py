@@ -36,7 +36,7 @@ def main() -> int:
         "BHJ = BroadcastHashJoin present, TOP = TakeOrderedAndProject fusion,",
         "PF = filters pushed to parquet scan, PY = python eval in plan (extensions only),",
         "GW = partition-less WindowExec (only allowed on provably bounded inputs —",
-        "gated by tests/test_plans.py::test_no_partitionless_window_on_fact_sized_inputs).",
+        "gated by the registry sweep, tests/test_parity.py::test_oracle_parity).",
         "",
     ]
     # Headline queries, plus non-headline operators whose plan shape is

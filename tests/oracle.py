@@ -9,6 +9,7 @@ first differing rows to debug drift.
 
 from __future__ import annotations
 
+import functools
 import math
 
 import duckdb
@@ -17,7 +18,9 @@ import pandas as pd
 from bigdatacw1_spark.sources.catalog import TABLES
 
 
+@functools.cache
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """One connection per scale factor, with a view per table."""
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -71,26 +74,23 @@ def _dtype_family(dtype) -> str:
     return "object"
 
 
-def assert_oracle_types_hashable(oracle_query: str, sf_dir: str) -> list[str]:
-    """Return the DuckDB output column types that would NOT materialize to
-    the same pandas dtype family as the natural Spark output — today that
-    means HUGEINT/UHUGEINT, which `.df()` converts to float64 while the
-    Spark side stays int64 (the exact r8 driver red). Callers assert the
-    returned list is empty. Binding is lazy — no execution cost."""
-    con = duck_con(sf_dir)
-    rel = con.sql(oracle_query)
+def oracle_relation(oracle_query: str, sf_dir: str) -> duckdb.DuckDBPyRelation:
+    """Bind the oracle (lazily, no execution) and assert no output column
+    is HUGEINT/UHUGEINT: `.df()` turns those into float64 while the Spark
+    side stays int64, so the driver's value hash fails even when every
+    value compares equal (the wh_rfm_segments r8 red)."""
+    rel = duck_con(sf_dir).sql(oracle_query)
     bad = [
         f"{c}: {t}"
         for c, t in zip(rel.columns, rel.types)
         if str(t).upper() in ("HUGEINT", "UHUGEINT")
     ]
-    con.close()
-    return bad
+    assert not bad, f"oracle output column(s) bind to HUGEINT: {bad} — add CAST(... AS BIGINT)"
+    return rel
 
 
 def compare(spark_df, oracle_query: str, sf_dir: str) -> None:
-    con = duck_con(sf_dir)
-    exp = _normalize(con.sql(oracle_query).df())
+    exp = _normalize(oracle_relation(oracle_query, sf_dir).df())
     got = _normalize(spark_df.toPandas())
     assert list(got.columns) == list(exp.columns), (
         f"schema mismatch: spark={list(got.columns)} oracle={list(exp.columns)}"

@@ -2,8 +2,9 @@
 
 Correctness is the oracle's job; these tests pin the plan SHAPES that
 make the same code hold at 100 TB: dimension joins broadcast, filters
-reach the parquet scan, top-k fuses into TakeOrderedAndProject, and no
-Python evaluation appears in reference-parity plans.
+reach the parquet scan, and top-k fuses into TakeOrderedAndProject. The
+registry-wide plan gates (global windows, Python eval, cartesian
+products) run in the registry sweep, tests/test_parity.py.
 """
 
 from __future__ import annotations
@@ -41,16 +42,6 @@ def test_filters_push_to_parquet_scan(spark):
 def test_topk_fuses_into_take_ordered(spark):
     for name in ["tpch_q3_shipping_priority", "tpch_q18_large_orders", "ref_nosql1_top_group"]:
         assert has_take_ordered(_df(spark, name)), f"{name}: top-k did a global sort"
-
-
-def test_reference_parity_plans_are_python_free(spark):
-    """Every reference-parity query must stay JVM-side end to end
-    (SURVEY.md §2.10 policy: no Python UDFs outside extensions).
-    ev_stateful*/ev_tws* are exempt by design: applyInPandasWithState /
-    transformWithState ARE Python stateful operators (§2.9)."""
-    parity = [n for n in REGISTRY if not n.startswith(("ext_", "ev_stateful", "ev_tws"))]
-    offenders = [n for n in parity if has_python_eval(_df(spark, n))]
-    assert offenders == []
 
 
 def test_semi_anti_plans_have_single_join(spark):
@@ -118,20 +109,6 @@ def test_range_band_join_broadcasts_nested_loop(spark):
 def test_skew_diag_and_topk_per_group_avoid_global_sort(spark):
     # diag_key_skew's top-10 must fuse into TakeOrderedAndProject.
     assert has_take_ordered(_df(spark, "diag_key_skew").limit(10))
-
-
-def test_new_quality_queries_are_python_free(spark):
-    for name in [
-        "ev_sessionize_lag",
-        "a14_stats_moments",
-        "a16_iqr_outliers",
-        "ext_repetition_signals",
-        "ext_crossdoc_ngram_overlap",
-        "ext_pii_redact",
-        "j10_orphan_audit",
-        "f13_unpivot",
-    ]:
-        assert not has_python_eval(_df(spark, name)), f"{name}: Python eval in plan"
 
 
 def test_binned_range_join_is_equi_shuffle_not_nested_loop(spark):
@@ -314,44 +291,6 @@ def test_bloom_probe_is_narrow_filter_no_shuffle(spark):
     assert not has_python_eval(probe)
 
 
-def test_late_round4_quality_entries_are_python_free_and_join_safe(spark):
-    """The late-round-4 text/assembly entries stay JVM-side (no Python
-    eval in the row path) and never degenerate to a cartesian product —
-    the two plan properties that keep them 100 TB-safe. (ext_mm_audio is
-    deliberately absent: its decode is an Arrow mapInPandas stage.)"""
-    for name in [
-        "ext_lm_surprisal",
-        "ext_line_dedup",
-        "ext_pii_luhn",
-        "ext_gopher_filter",
-        "ext_dataset_card",
-        "ext_incremental_admission",
-        "ext_contrastive_pairs",
-    ]:
-        df = _df(spark, name)
-        assert not has_python_eval(df), f"{name}: Python eval in plan"
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
-
-
-def test_session_r4b_entries_are_python_free_and_join_safe(spark):
-    """The retrieval/IVM/tokenizer batch stays JVM-side and
-    cartesian-free (one-row broadcast stats plan as BroadcastNestedLoop,
-    never CartesianProduct). ext_mm_jpeg is deliberately absent: its
-    decode is an Arrow mapInPandas stage."""
-    for name in [
-        "ext_bm25_topk",
-        "ext_bpe_tokenize",
-        "ext_l_diversity",
-        "ev_ewma",
-        "wh_ivm_join_delta",
-    ]:
-        df = _df(spark, name)
-        assert not has_python_eval(df), f"{name}: Python eval in plan"
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
-
-
 def test_bpe_tokenize_is_single_scan_no_shuffle(spark):
     """bpe_segment is a row-local expression chain: the counting plan
     must contain no Exchange at all (the orderBy in the registry entry
@@ -364,78 +303,6 @@ def test_bpe_tokenize_is_single_scan_no_shuffle(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
-
-
-def test_no_partitionless_window_on_fact_sized_inputs(spark):
-    """THE single-partition-window gate (VERDICT r4 #1): a WindowExec
-    with no partitionBy moves every row to one task — a straggler at
-    sf0.1 and an OOM at 100 TB. No registry entry may plan one over
-    fact/corpus-sized input; exact global ranks/prefix sums go through
-    operators.warehouse.global_order_columns (range-sharded rank +
-    broadcast offsets) instead. The allowlist below names every entry
-    whose global window is PROVABLY bounded by construction — each with
-    the bound — so any new entry that plans an unbounded global window
-    fails here, not in production."""
-    from bigdatacw1_spark.plans import count_global_windows
-
-    bounded_ok = {
-        # windows over top-k results (k=20 rows by construction)
-        "ext_hybrid_rrf": 2,
-        # position row_numbers over the two top-10 frames (k=10 rows)
-        "ext_retrieval_ndcg": 2,
-        # position row_number over the BM25 top-10 frame (k=10 rows)
-        "ext_err_metric": 1,
-        # rank row_number over the round-2 top-10 frame (k=10 rows)
-        "ext_rocchio_prf": 1,
-        # rank over the top-200 vocabulary frame (bounded by LIMIT)
-        "ext_zipf_fit": 1,
-        # rank over the top-10 |z| frame (bounded by LIMIT)
-        "ext_log_odds_terms": 1,
-        # window over the class vocabulary (distinct event types; the
-        # encode design already broadcasts it, so it is tiny by contract)
-        "ext_label_encode": 1,
-        # waterfill over the LANGUAGE table (vocabulary-bounded by
-        # construction — the corpus-sized pass is the upstream hash agg);
-        # row_number and the exclusive prefix sum plan as two frames
-        "ext_unimax_mix": 2,
-        # final merge over per-partition-pruned skyline candidates
-        # (operators/relational.skyline_2d documents the trade)
-        "ext_skyline_parts": 1,
-        # rank cumulation over distinct (4-digit score, label) cells —
-        # <= 2·10^4 + 2 rows by construction (the corpus-sized pass is
-        # the upstream hash aggregate; see binary_classifier_eval)
-        "ext_quality_eval": 1,
-        # windows over distinct event DAYS (calendar-bounded)
-        "wh_survival_km": 2,
-        # same lifetimes construction as wh_survival_km: reverse risk-set
-        # sum + forward hazard sums over distinct DAYS (calendar-bounded)
-        "wh_nelson_aalen": 2,
-        # BH step-up over the hypothesis FAMILY — segment x priority
-        # cells, <= 25 rows by vocabulary construction (the corpus-sized
-        # pass is the upstream broadcast-join hash aggregate); rank, i*,
-        # and the reversed cumulative-min adjusted-p plan as three frames
-        "wh_bh_fdr": 3,
-        # Holm step-down over the same 25-row hypothesis FAMILY: rank +
-        # running-max adjusted p + running-min pass indicator
-        "wh_holm_bonferroni": 3,
-        # windows over the per-day FILE INVENTORY (metadata, not data)
-        "wh_compaction_plan": 1,
-        "wh_file_stats": 1,
-        # rank row_number over the reservoir top-20 frame (k rows by
-        # LIMIT construction; the corpus-sized pass is the upstream
-        # TakeOrderedAndProject)
-        "ext_weighted_reservoir": 1,
-    }
-    offenders = {}
-    for name, spec in REGISTRY.items():
-        n = count_global_windows(spec.fn(spark, SF_SMALL))
-        if n > bounded_ok.get(name, 0):
-            offenders[name] = n
-    assert not offenders, (
-        f"partition-less WindowExec on fact-sized input: {offenders} — "
-        "use global_order_columns/ntile_from_rank, or justify a bound "
-        "in the allowlist"
-    )
 
 
 def test_global_order_columns_matches_window_semantics(spark):
@@ -594,38 +461,11 @@ def test_mmr_topk_cut_fuses_into_take_ordered(spark):
     assert has_broadcast_hash_join(df)
 
 
-def test_round8_second_batch_entries_are_python_free_and_join_safe(spark):
-    """The round-8 second batch stays JVM-side and cartesian-free. The
-    headline claim is ext_rouge_l_pairs: its LCS dynamic program is a
-    nested higher-order-function fold, so the plan must contain ZERO
-    Python eval — an accidental fallback to a Python UDF would silently
-    cost 10-100x at corpus scale. The codec entries (ext_mm_ulaw /
-    ext_avro_roundtrip / ext_mm_tiff) are deliberately absent: their
-    decode stages are Arrow mapInPandas by design. ext_adamic_adar
-    additionally must plan its inverted-index pair join as a real
-    equi-join (a cartesian here would be the all-pairs blowup the
-    degree cap exists to prevent)."""
-    for name in [
-        "ext_rouge_l_pairs",
-        "ext_adamic_adar",
-        "ext_hits_scores",
-        "ext_cohen_kappa",
-        "ext_krippendorff_alpha",
-        "ext_surt_keys",
-    ]:
-        df = _df(spark, name)
-        assert not has_python_eval(df), f"{name}: Python eval in plan"
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
-
-
 def test_round10_entries_plan_shapes(spark):
-    """Round-10 design claims, CI-enforced: the Mann-Kendall pair join
+    """Round-10 design claim, CI-enforced: the Mann-Kendall pair join
     must broadcast the calendar-bounded daily aggregate (never fall
-    back to a cartesian or broadcast-nested-loop), and ext_cdc_chunking
-    — whose whole point is that windowed-Rabin boundary detection needs
-    no Python — must stay JVM-side end to end despite living in the
-    ext_ namespace (exempt from the parity-wide python-free sweep)."""
+    back to a cartesian or broadcast-nested-loop). ext_cdc_chunking's
+    all-JVM, cartesian-free plan is gated by the registry sweep."""
     from bigdatacw1_spark.plans import formatted_plan
 
     mk_df = _df(spark, "ev_mann_kendall")
@@ -636,35 +476,20 @@ def test_round10_entries_plan_shapes(spark):
     # NO join in the plan falls back to a shuffled sort-merge.
     assert "SortMergeJoin" not in mk, "pair join must broadcast the daily agg"
     assert has_broadcast_hash_join(mk_df)
-    cdc_df = _df(spark, "ext_cdc_chunking")
-    assert not has_python_eval(cdc_df), "CDC boundary detection regressed to Python"
-    assert "CartesianProduct" not in formatted_plan(cdc_df)
 
 
 def test_round11_entries_plan_shapes(spark):
-    """Round-11 design claims, CI-enforced. ext_kmv_ndv's bottom-k must
-    stay the salted two-level form: every Window in the plan is
-    PARTITIONED (a partition-less window would be the whole-data
-    single-task regression the salting exists to prevent) and the final
-    dim join broadcasts. ext_heaps_law must broadcast its 10-row
-    checkpoint table on both range-joins and plan no window at all.
-    ev_gorilla_dod's stacked LAGs share one partitioning, so the plan
-    must contain exactly one shuffle and no sort-merge join. The
-    exact-replay sketch entries must stay all-JVM (no Python eval)."""
-    import re
-
+    """Round-11 design claims, CI-enforced. ext_kmv_ndv's final dim
+    join broadcasts (the registry sweep's bound of 0 global windows
+    keeps its bottom-k the salted two-level form, and keeps it and the
+    exact-replay sketch entries all-JVM). ext_heaps_law must broadcast
+    its 10-row checkpoint table on both range-joins and plan no window
+    at all. ev_gorilla_dod's stacked LAGs share one partitioning, so the
+    plan must contain exactly one shuffle and no sort-merge join."""
     from bigdatacw1_spark.plans import formatted_plan
 
     kmv_df = _df(spark, "ext_kmv_ndv")
     kmv = formatted_plan(kmv_df)
-    for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", kmv):
-        head = spec.split(",")[0].strip()
-        # a partitioned spec leads with a partition expression; a
-        # partition-less one leads straight with a SortOrder (any
-        # direction/null placement)
-        assert not re.search(r"(ASC|DESC) NULLS (FIRST|LAST)$", head), (
-            "partition-less window in ext_kmv_ndv: " + spec
-        )
     assert has_broadcast_hash_join(kmv_df)
     assert "SortMergeJoin" not in kmv
 
@@ -683,24 +508,18 @@ def test_round11_entries_plan_shapes(spark):
     assert gd.count("+- Exchange") == 3, "gorilla dod shuffle count changed"
     assert gd.count("Window (") == 2 and "SortMergeJoin" not in gd
 
-    for name in ("ext_kmv_ndv", "ext_heaps_law", "ev_gorilla_dod",
-                 "ext_cms_replay", "ext_good_turing"):
-        assert not has_python_eval(_df(spark, name)), f"{name}: Python eval"
-
 
 def test_round12_entries_plan_shapes(spark):
     """Round-12 design claims, CI-enforced. ext_weighted_reservoir must
     fuse its global top-k to TakeOrderedAndProject (per-partition heaps,
     no full sort, no corpus shuffle) — its only window sits above the
-    20-row limit. ext_kmv_set_algebra keeps the salted two-level
-    bottom-k (every window partitioned) and joins only sketch-sized /
-    broadcast sides (no sort-merge fallback). wh_ks_test's cumulative
-    window partitions by type PAIR and its dimension joins broadcast.
-    wh_jackknife_ratio and wh_cooks_distance are closed-form moment
-    passes: no window at all, broadcast-only joins, and top-k for
-    cooks fuses to TakeOrderedAndProject. All five stay all-JVM."""
-    import re
-
+    20-row limit. ext_kmv_set_algebra joins only sketch-sized /
+    broadcast sides (no sort-merge fallback). wh_ks_test's dimension
+    joins broadcast. wh_jackknife_ratio and wh_cooks_distance are
+    closed-form moment passes: no window at all, broadcast-only joins,
+    and top-k for cooks fuses to TakeOrderedAndProject. The registry
+    sweep keeps all five all-JVM and every window of ext_kmv_set_algebra
+    and wh_ks_test partitioned."""
     from bigdatacw1_spark.plans import formatted_plan
 
     res_df = _df(spark, "ext_weighted_reservoir")
@@ -710,22 +529,12 @@ def test_round12_entries_plan_shapes(spark):
 
     kmv_df = _df(spark, "ext_kmv_set_algebra")
     kmv = formatted_plan(kmv_df)
-    for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", kmv):
-        head = spec.split(",")[0].strip()
-        assert not re.search(r"(ASC|DESC) NULLS (FIRST|LAST)$", head), (
-            "partition-less window in ext_kmv_set_algebra: " + spec
-        )
     assert "SortMergeJoin" not in kmv, "sketch-side join fell back to SMJ"
 
     ks_df = _df(spark, "wh_ks_test")
     ks = formatted_plan(ks_df)
     assert has_broadcast_hash_join(ks_df)
     assert "SortMergeJoin" not in ks
-    for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", ks):
-        head = spec.split(",")[0].strip()
-        assert not re.search(r"(ASC|DESC) NULLS (FIRST|LAST)$", head), (
-            "partition-less window in wh_ks_test: " + spec
-        )
 
     jk_df = _df(spark, "wh_jackknife_ratio")
     jk = formatted_plan(jk_df)
@@ -737,7 +546,3 @@ def test_round12_entries_plan_shapes(spark):
     assert "Window" not in cd, "cooks distance is closed-form; no window allowed"
     assert "TakeOrderedAndProject" in cd, "cooks top-k lost heap fusion"
     assert "SortMergeJoin" not in cd
-
-    for name in ("ext_weighted_reservoir", "ext_kmv_set_algebra", "wh_ks_test",
-                 "wh_jackknife_ratio", "wh_cooks_distance"):
-        assert not has_python_eval(_df(spark, name)), f"{name}: Python eval"
