@@ -13,7 +13,7 @@ import math
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -32,7 +32,7 @@ def stable_round(value: Column, digits: int = 4) -> Column:
     Only valid for |x*10^d| < 2^53 (fine for all our ratios/aggregates).
     """
     s = float(10**digits)
-    return F.floor(value * F.lit(s) + F.lit(0.5)) / F.lit(s)
+    return F.floor(value * s + 0.5) / s
 
 
 def quantize_big(value: Column) -> Column:
@@ -220,41 +220,121 @@ def fan_out(
     return df
 
 
-def exact_avg(value: Column | str, scale: int = 4, digits: int | None = 4) -> Column:
-    """Cross-engine-deterministic average (SURVEY.md §7.4.4).
+# The exact aggregates are written as one SQL expression each and built
+# with a single ``F.expr``: a PySpark Column method costs about 1 ms of
+# driver time (py4j round trips plus call-site capture), and the ~30 Column
+# calls of one limb-summed average would double a query's build time.
+#
+# Exact sums split each quantized LONG into two unsigned 18-bit limbs and
+# the signed rest (q >> 36). Each limb sums as a primitive LONG: the two low
+# limbs stay exact to 2^45 rows per group, and so does the top one while
+# |q| < 2^54, i.e. for every value a double holds to the unit of its scale.
+_LIMB_BITS = 18
+_LIMB_MASK = (1 << _LIMB_BITS) - 1
+
+
+def _dbl(v: float) -> str:
+    """A DOUBLE literal in Spark SQL (plain ``1.5`` parses as DECIMAL)."""
+    return f"{float(v)!r}D"
+
+
+def _units_sql(value: str, scale: int) -> str:
+    ansi = SparkSession.active().conf.get("spark.sql.ansi.enabled") == "true"
+    # sign(x * 10^s) == sign(x) for s >= 0; the shorter form keeps plans small
+    q = f"rint(({value}) * {_dbl(10**scale)} + signum({value}) * {_dbl(1e-9)})"
+    return f"{'CAST' if ansi else 'TRY_CAST'}({q} AS BIGINT)"
+
+
+def _sum_units_sql(q: str) -> str:
+    b, m = _LIMB_BITS, _LIMB_MASK
+    return (
+        f"((CAST(sum(shiftright({q}, {2 * b})) AS DECIMAL(38,0)) * {1 << b}"
+        f" + sum(shiftright({q}, {b}) & {m})) * {1 << b} + sum({q} & {m}))"
+    )
+
+
+def _round_sql(value: str, digits: int | None) -> str:
+    """``stable_round`` in SQL; ``digits=None`` returns ``value``."""
+    if digits is None:
+        return value
+    s = _dbl(10**digits)
+    return f"FLOOR(({value}) * {s} + {_dbl(0.5)}) / {s}"
+
+
+def decimal_units(value: str, scale: int) -> Column:
+    """DuckDB's ``CAST(x AS DECIMAL(30,s))`` as its unscaled integer: a
+    LONG count of 10^-s units, computed without a per-row decimal.
+    ``value`` is a SQL expression (a column name, or e.g.
+    ``"l_extendedprice * (1 - l_discount)"``).
+
+    Spark casts a double to DECIMAL through ``java.math.BigDecimal``
+    (built from ``Double.toString``), an object per row that dominated
+    the exact aggregates. These are DuckDB's own cast steps in IEEE
+    arithmetic, so both engines quantize a double to the same integer
+    (ties such as 1.005 or -2.5 included; pinned against DuckDB in
+    tests/test_relational_more.py): ``q = x * 10^s``, nudge by
+    ``sign(q) * 1e-9``, round half to even (``rint``, C's
+    ``nearbyint``), convert to an integer.
+
+    Magnitude bound: |x * 10^s| < 2^63. Past it the conversion fails like
+    the decimal cast it replaces: under ANSI mode (this engine's
+    default) the query errors; with spark.sql.ansi.enabled=false the
+    value becomes NULL, never a saturated 2^63 - 1. The cast reads the
+    mode when the column is built, as Spark's own casts do at analysis.
+    """
+    return F.expr(_units_sql(value, scale))
+
+
+def sum_units(value: str, scale: int) -> Column:
+    """``SUM(CAST(x AS DECIMAL(30,s)))`` as its unscaled integer, a
+    DECIMAL(38,0): exact and order-independent, from primitive LONG adds
+    per row (three limb sums, see ``_LIMB_BITS``) recombined once per
+    group. A limb sum past 2^63 raises under ANSI."""
+    return F.expr(_sum_units_sql(_units_sql(value, scale)))
+
+
+def from_units(units: Column, scale: int) -> Column:
+    """DECIMAL(p,s) → DOUBLE in DuckDB's steps, from the unscaled integer:
+    ``double(N) / 10^s``."""
+    return units.cast("double") / float(10**scale)
+
+
+def exact_avg(value: str, scale: int = 4, digits: int | None = 4) -> Column:
+    """Cross-engine-deterministic average (SURVEY.md §7.4.4) of the SQL
+    expression ``value``.
 
     ``avg(double)`` sums in partition order, so two engines (or two runs
     with different partitioning) can disagree in the last ulp — which
     flips the final rounded digit whenever the true value sits at a
-    rounding boundary. Instead: quantize to DECIMAL (exact, associative
-    sum — order-independent), then one double division and a stable_round.
-    DuckDB equivalent:
+    rounding boundary. Instead: quantize to integer units of 10^-s
+    (``decimal_units``, exactly DuckDB's decimal cast), sum them exactly
+    (``sum_units``: associative, order-independent), then one double
+    division and a stable_round. DuckDB equivalent:
     ``FLOOR((SUM(CAST(x AS DECIMAL(30,s))) / COUNT(x)) * 10^d + 0.5) / 10^d``.
 
     ``scale`` must be >= the decimals of the data (lossless quantization).
-    Magnitude bound: decimal(30,s) holds |x| < 10^(30-s), so individual
-    values AND the running sum must stay under that bound (s=4 → 10^26;
-    ample for our monetary/quantity columns). A value beyond the bound
-    fails the cast: under Spark 4's default ANSI mode (what this engine
-    runs) the query ERRORS — loud and safe; only with
-    spark.sql.ansi.enabled=false does it become NULL and silently drop
-    from BOTH sum and count, skewing the "exact" average — detectable
-    then as F.count(col) != count of the decimal cast (behavior pinned
-    in tests/test_relational_more.py). ``digits=None`` skips the final
-    round (still deterministic).
+    Magnitude bound: each value needs |x * 10^s| < 2^63 (s=4 → 9.2e14;
+    ample for our monetary/quantity columns); sums have no practical
+    bound (exact to 2^45 rows per group, see ``_LIMB_BITS``). A value
+    beyond the bound fails its quantization: under Spark 4's default ANSI
+    mode (what this engine runs) the query ERRORS — loud and safe; only
+    with spark.sql.ansi.enabled=false does it become NULL and drop from
+    BOTH sum and count, skewing the "exact" average — detectable then as
+    F.count(col) != F.count(decimal_units(col, s)) (behavior pinned in
+    tests/test_relational_more.py). A saturated value never enters the
+    sum. ``digits=None`` skips the final round (still deterministic).
     """
-    c = (F.col(value) if isinstance(value, str) else value).cast(f"decimal(30,{scale})")
-    avg = F.sum(c).cast("double") / F.count(c)
-    return stable_round(avg, digits) if digits is not None else avg
+    q = _units_sql(value, scale)
+    avg = f"CAST({_sum_units_sql(q)} AS DOUBLE) / {_dbl(10**scale)} / count({q})"
+    return F.expr(_round_sql(avg, digits))
 
 
-def exact_sum(value: Column | str, scale: int = 4, digits: int | None = 2) -> Column:
-    """Order-independent sum of doubles via decimal quantization — same
-    rationale as exact_avg. DuckDB equivalent:
+def exact_sum(value: str, scale: int = 4, digits: int | None = 2) -> Column:
+    """Order-independent sum of the SQL expression ``value`` via decimal
+    quantization — same rationale and bounds as exact_avg. DuckDB equivalent:
     ``FLOOR(CAST(SUM(CAST(x AS DECIMAL(30,s))) AS DOUBLE) * 10^d + 0.5) / 10^d``."""
-    c = (F.col(value) if isinstance(value, str) else value).cast(f"decimal(30,{scale})")
-    s = F.sum(c).cast("double")
-    return stable_round(s, digits) if digits is not None else s
+    s = f"CAST({_sum_units_sql(_units_sql(value, scale))} AS DOUBLE) / {_dbl(10**scale)}"
+    return F.expr(_round_sql(s, digits))
 
 
 def conditional_avg(value: Column | str, cond: Column, alias: str) -> Column:

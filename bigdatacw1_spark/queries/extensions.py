@@ -2071,7 +2071,7 @@ def ext_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.select("label", F.posexplode("embedding").alias("pos0", "v"))
         .groupBy("label", (F.col("pos0") + 1).cast("int").alias("pos"))
-        .agg(exact_avg(F.col("v").cast("double"), scale=6, digits=4).alias("c"))
+        .agg(exact_avg("CAST(v AS DOUBLE)", scale=6, digits=4).alias("c"))
         .orderBy("label", "pos")
     )
 
@@ -6764,7 +6764,7 @@ def ext_active_learning(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = (
         e.select("label", F.posexplode("embedding").alias("pos0", "v"))
         .groupBy("label", (F.col("pos0") + 1).cast("int").alias("pos"))
-        .agg(exact_avg(F.col("v").cast("double"), scale=6, digits=4).alias("c"))
+        .agg(exact_avg("CAST(v AS DOUBLE)", scale=6, digits=4).alias("c"))
     )
     cvec = cents.groupBy("label").agg(
         F.transform(

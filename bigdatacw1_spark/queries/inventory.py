@@ -119,8 +119,8 @@ def ref_sql1_conditional_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(exact_avg("c_acctbal", scale=2).alias("avg_bal"))
     )
     agged = seg_bal.groupBy("c_mktsegment").agg(
-        exact_avg(F.when(F.col("n_name") == a, F.col("avg_bal"))).alias("n1_bal"),
-        exact_avg(F.when(F.col("n_name") == b, F.col("avg_bal"))).alias("n2_bal"),
+        exact_avg(f"CASE WHEN n_name = '{a}' THEN avg_bal END").alias("n1_bal"),
+        exact_avg(f"CASE WHEN n_name = '{b}' THEN avg_bal END").alias("n2_bal"),
         F.countDistinct("n_name").alias("__n"),
     )
     agged = agged.withColumn(

@@ -285,7 +285,7 @@ def j5_multiway_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
         .groupBy("n_name")
         .agg(
-            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), scale=6).alias("revenue"),
+            exact_sum("l_extendedprice * (1 - l_discount)", scale=6).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .orderBy("n_name")
@@ -374,7 +374,7 @@ def j9_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         salted_join(l, p, "l_partkey", "p_partkey", n_salts=8)
         .groupBy("p_brand")
         .agg(
-            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), scale=6).alias("revenue"),
+            exact_sum("l_extendedprice * (1 - l_discount)", scale=6).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -442,10 +442,11 @@ def f7_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefer from_json ONCE into a struct column over repeated path
     extraction of the same document."""
     ev = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("bigint")
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        exact_sum(k.cast("double"), scale=0, digits=2).alias("sum_k"),
+        exact_sum(
+            "CAST(CAST(get_json_object(props, '$.k') AS BIGINT) AS DOUBLE)", scale=0, digits=2
+        ).alias("sum_k"),
     )
 
 
@@ -569,8 +570,7 @@ def a1_multikey_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a2_avg_of_expression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 avg over an arithmetic expression — the daily-return shape
     ``avg(((close-open)/open)*100)`` (SQLQueries.sql:12)."""
-    base = F.col("l_quantity") * 100
-    expr = ((F.col("l_extendedprice") - base) / base) * 100
+    expr = "((l_extendedprice - l_quantity * 100) / (l_quantity * 100)) * 100"
     return (
         _t(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -599,8 +599,8 @@ def a3_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     F3 searched CASE with null-rejecting comparisons."""
     o = _t(spark, sf_dir, "orders")
     pv = o.groupBy("o_orderpriority").agg(
-        exact_avg(F.when(F.col("o_orderstatus") == "F", F.col("o_totalprice")), scale=2).alias("f_avg"),
-        exact_avg(F.when(F.col("o_orderstatus") == "O", F.col("o_totalprice")), scale=2).alias("o_avg"),
+        exact_avg("CASE WHEN o_orderstatus = 'F' THEN o_totalprice END", scale=2).alias("f_avg"),
+        exact_avg("CASE WHEN o_orderstatus = 'O' THEN o_totalprice END", scale=2).alias("o_avg"),
     )
     return pv.select(
         "o_orderpriority",

@@ -16,7 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatacw1_spark.operators.relational import exact_avg, exact_sum, fan_out, stable_round
+from bigdatacw1_spark.operators.relational import (
+    exact_avg,
+    exact_sum,
+    fan_out,
+    from_units,
+    stable_round,
+    sum_units,
+)
 from bigdatacw1_spark.queries.registry import q
 from bigdatacw1_spark.queries.registry import t as _t
 
@@ -45,7 +52,7 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     One scan, one tiny shuffle (6 groups); everything else is partial
     aggregation inside whole-stage codegen.
 
-    fan_out: the exact-decimal aggregate expressions make this the one
+    fan_out: seven exact aggregates per row make this the most
     CPU-bound headline query, and the test parquet is a single row group
     (scan parallelism 1), so the conditional repartition buys a measured
     ~40%. Round-4 interleaved A/B (n=6 each, sf0.1) including the COLD
@@ -67,8 +74,8 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_discount", "l_tax", "l_shipdate",
         )
     )
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
+    disc_price = "l_extendedprice * (1 - l_discount)"
+    charge = f"{disc_price} * (1 + l_tax)"
     return (
         l.where(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -120,7 +127,7 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(l, o["o_orderkey"] == l["l_orderkey"])
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), scale=6).alias("revenue")
+            exact_sum("l_extendedprice * (1 - l_discount)", scale=6).alias("revenue")
         )
         .orderBy(F.desc("revenue"), F.asc("o_orderdate"), F.asc("l_orderkey"))
         .limit(10)
@@ -167,7 +174,7 @@ def tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
         .groupBy("n_name")
         .agg(
-            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), scale=6).alias("revenue")
+            exact_sum("l_extendedprice * (1 - l_discount)", scale=6).alias("revenue")
         )
         .orderBy(F.desc("revenue"), F.asc("n_name"))
     )
@@ -249,7 +256,7 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("cust_nation") != F.col("supp_nation"))
         .groupBy("cust_nation", "supp_nation", F.year("l_shipdate").alias("l_year"))
         .agg(
-            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), scale=6).alias("revenue")
+            exact_sum("l_extendedprice * (1 - l_discount)", scale=6).alias("revenue")
         )
         .orderBy("cust_nation", "supp_nation", "l_year")
     )
@@ -286,7 +293,7 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
     p = _t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
-    vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(30,6)")
+    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     base = (
         l.join(o, l["l_orderkey"] == o["o_orderkey"])
         .join(s, l["l_suppkey"] == s["s_suppkey"])
@@ -298,14 +305,14 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("supp_nation"),
         )
     )
-    nat_vol = F.when(F.col("supp_nation") == "NATION_1", F.col("volume")).otherwise(
-        F.lit(0).cast("decimal(30,6)")
-    )
+    nat_vol = "CASE WHEN supp_nation = 'NATION_1' THEN volume ELSE 0.0D END"
     return (
         base.groupBy("o_year")
         .agg(
             stable_round(
-                F.sum(nat_vol).cast("double") / F.sum("volume").cast("double"), 4
+                exact_sum(nat_vol, scale=6, digits=None)
+                / exact_sum("volume", scale=6, digits=None),
+                4,
             ).alias("mkt_share")
         )
         .orderBy("o_year")
@@ -336,7 +343,7 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            exact_sum(F.col("l_extendedprice") * F.col("l_discount"), scale=6).alias("revenue"),
+            exact_sum("l_extendedprice * l_discount", scale=6).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -377,7 +384,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
-            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), scale=6).alias("revenue")
+            exact_sum("l_extendedprice * (1 - l_discount)", scale=6).alias("revenue")
         )
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
@@ -400,19 +407,21 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14: promo revenue share — conditional aggregation over a
     fact⨝dim join. part broadcasts (it is the small side); the month
-    filter prunes lineitem at the scan. Decimal sums keep the ratio
+    filter prunes lineitem at the scan. Exact sums keep the ratio
     order-independent across engines."""
     l = _t(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
     )
     p = _t(spark, sf_dir, "part")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(30,6)")
-    promo_rev = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast("decimal(30,6)"))
+    rev = "l_extendedprice * (1 - l_discount)"
+    promo_rev = f"CASE WHEN p_type = 'PROMO' THEN {rev} ELSE 0.0D END"
     joined = l.join(F.broadcast(p), l["l_partkey"] == p["p_partkey"])
     return joined.agg(
         stable_round(
-            (F.lit(100.0) * F.sum(promo_rev).cast("double")) / F.sum(rev).cast("double"), 4
+            (F.lit(100.0) * exact_sum(promo_rev, scale=6, digits=None))
+            / exact_sum(rev, scale=6, digits=None),
+            4,
         ).alias("promo_revenue_pct")
     )
 
@@ -449,7 +458,7 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(o, l["l_orderkey"] == o["o_orderkey"])
         .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year"))
         .agg(
-            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), scale=6).alias("profit")
+            exact_sum("l_extendedprice * (1 - l_discount)", scale=6).alias("profit")
         )
         .orderBy("nation", F.desc("o_year"))
     )
@@ -516,7 +525,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(
-            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), scale=6).alias(
+            exact_sum("l_extendedprice * (1 - l_discount)", scale=6).alias(
                 "total_revenue"
             )
         )
@@ -550,21 +559,21 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     """TPC-H Q17: lines below 20% of their part's average quantity — the
     correlated-aggregate pattern, decorrelated by hand into a per-part
     aggregate re-joined to the fact (exactly what Catalyst does to the
-    correlated form). Decimal per-part averages keep the 0.2*avg threshold
-    bit-identical across engines."""
+    correlated form). exact_avg per part (DuckDB's own cast and division
+    steps) keeps the 0.2*avg threshold bit-identical across engines."""
     l = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#1")
     avg_qty = l.groupBy(F.col("l_partkey").alias("pk")).agg(
-        (F.sum(F.col("l_quantity").cast("decimal(30,2)")) / F.count("l_quantity")).alias("aq")
+        exact_avg("l_quantity", scale=2, digits=None).alias("aq")
     )
     return (
         l.join(F.broadcast(p), l["l_partkey"] == p["p_partkey"])
         .join(avg_qty, l["l_partkey"] == F.col("pk"))
         .where(F.col("l_quantity") < 0.2 * F.col("aq"))
         .agg(
-            stable_round(
-                F.sum(F.col("l_extendedprice").cast("decimal(30,2)")).cast("double") / 7.0, 2
-            ).alias("avg_yearly"),
+            stable_round(exact_sum("l_extendedprice", scale=2, digits=None) / 7.0, 2).alias(
+                "avg_yearly"
+            ),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -599,7 +608,7 @@ def tpch_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataF
         F.col("o_orderdate") >= F.lit("2000-06-01").cast("timestamp")
     )
     avg_bal = c.where(F.col("c_acctbal") > 0.0).agg(
-        (F.sum(F.col("c_acctbal").cast("decimal(30,2)")) / F.count("c_acctbal")).alias("avg_bal")
+        exact_avg("c_acctbal", scale=2, digits=None).alias("avg_bal")
     )
     return (
         c.join(F.broadcast(avg_bal))
@@ -644,7 +653,7 @@ def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         | branch("Brand#3", 20, 50, 20, 30)
     )
     return joined.where(cond).agg(
-        exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), scale=6).alias("revenue"),
+        exact_sum("l_extendedprice * (1 - l_discount)", scale=6).alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
@@ -688,8 +697,8 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = _t(spark, sf_dir, "lineitem")
     big = (
         l.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(30,2)")).alias("__q"))
-        .where(F.col("__q") > 120)
+        .agg(sum_units("l_quantity", 2).alias("__q"))
+        .where(F.col("__q") > 12000)  # HAVING SUM(...) > 120, in hundredths
     )
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
@@ -698,7 +707,7 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(big, o["o_orderkey"] == big["l_orderkey"])
         .select(
             "c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice",
-            stable_round(F.col("__q").cast("double"), 2).alias("total_qty"),
+            stable_round(from_units(F.col("__q"), 2), 2).alias("total_qty"),
         )
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(10)
@@ -815,8 +824,8 @@ def tpch_q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_suppkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(30,2)")).alias("qty"))
-        .where(F.col("qty") > 300)
+        .agg(sum_units("l_quantity", 2).alias("qty"))
+        .where(F.col("qty") > 30000)  # HAVING SUM(...) > 300, in hundredths
         .select("l_suppkey")
     )
     n = _t(spark, sf_dir, "nation").where(
@@ -985,12 +994,13 @@ def tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "lineitem")
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.col("l_partkey").alias("ps_partkey"))
-        .agg(F.sum(F.col("l_extendedprice").cast("decimal(30,2)")).alias("v"))
+        .agg(sum_units("l_extendedprice", 2).alias("v"))
     )
-    total = val.agg((F.sum("v").cast("double") * F.lit(0.001)).alias("threshold"))
+    total = val.agg((from_units(F.sum("v"), 2) * F.lit(0.001)).alias("threshold"))
+    v = from_units(F.col("v"), 2)
     return (
         val.join(F.broadcast(total))
-        .where(F.col("v").cast("double") > F.col("threshold"))
-        .select("ps_partkey", stable_round(F.col("v").cast("double"), 2).alias("part_value"))
+        .where(v > F.col("threshold"))
+        .select("ps_partkey", stable_round(v, 2).alias("part_value"))
         .orderBy(F.desc("part_value"), "ps_partkey")
     )

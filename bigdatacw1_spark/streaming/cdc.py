@@ -93,7 +93,7 @@ def _update_cdc(key, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterato
     )
 
 
-def _batch_cdc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _batch_cdc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
     live, a, b, n = _fold_ops((False, None, None, 0), pdf)
     return pd.DataFrame(

@@ -179,42 +179,97 @@ def test_salted_join_rejects_outer(spark):
 
 
 def test_exact_avg_overflow_documented_behavior(spark):
-    """Pin the documented decimal(30,s) bound (ADVICE r1): under ANSI
+    """Pin the documented |x * 10^s| < 2^63 bound (ADVICE r1): under ANSI
     mode (this engine's default) an overflowing value ERRORS the query;
     under non-ANSI it becomes NULL and drops out of BOTH sum and count,
-    detectable as a count mismatch vs the raw column."""
+    detectable as a count mismatch vs the raw column — never a total
+    saturated at 2^63 - 1. Sums themselves may pass 2^63 units."""
     import pytest as _pytest
 
     from pyspark.sql import functions as F
 
-    from bigdatacw1_spark.operators.relational import exact_avg
+    from bigdatacw1_spark.operators.relational import decimal_units, exact_avg, exact_sum
 
     ok = spark.createDataFrame([(1.5,), (2.5,)], "x double")
     assert ok.agg(exact_avg("x", scale=4).alias("a")).head()[0] == 2.0
 
-    huge = spark.createDataFrame([(1e27,), (4.0,)], "x double")  # 1e27 > 10^26
-    agg = huge.agg(
-        exact_avg("x", scale=4).alias("a"),
-        F.count("x").alias("n_double"),
-        F.count(F.col("x").cast("decimal(30,4)")).alias("n_decimal"),
-    )
-    with _pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE|cannot be represented"):
-        agg.head()
+    # 9e18 units each (just under 2^63); their sum needs more than a LONG.
+    big = spark.createDataFrame([(9e14,), (9e14,)], "x double")
+    assert big.agg(exact_sum("x", scale=4, digits=None)).head()[0] == 1.8e15
+
+    huge = spark.createDataFrame([(1e27,), (4.0,)], "x double")  # 1e31 units > 2^63
+
+    def agg():
+        # ANSI-ness is fixed when the columns are built: rebuild per mode
+        return huge.agg(
+            exact_avg("x", scale=4).alias("a"),
+            exact_sum("x", scale=4, digits=None).alias("s"),
+            F.count("x").alias("n_double"),
+            F.count(decimal_units("x", 4)).alias("n_units"),
+        )
+
+    with _pytest.raises(Exception, match="CAST_OVERFLOW|due to an overflow"):
+        agg().head()
 
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
-        # ANSI-ness is baked into the Cast at ANALYSIS time - rebuild the plan
-        row = huge.agg(
-            exact_avg("x", scale=4).alias("a"),
-            F.count("x").alias("n_double"),
-            F.count(F.col("x").cast("decimal(30,4)")).alias("n_decimal"),
-        ).head()
-        # silent exclusion: avg of the survivor only, count mismatch as signal
-        assert row.a == 4.0
-        assert row.n_double == 2 and row.n_decimal == 1
+        row = agg().head()
+        # silent exclusion: avg and sum of the survivor only, count
+        # mismatch as signal; no saturated (~9.2e14) contribution
+        assert row.a == 4.0 and row.s == 4.0
+        assert row.n_double == 2 and row.n_units == 1
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_decimal_units_match_duckdb_cast(spark):
+    """decimal_units reproduces DuckDB's CAST(x AS DECIMAL(30,s)) exactly:
+    ties, negatives, NULL, price·(1-disc)·(1+tax) products, uniform
+    values and values around 2^53 units, at every scale the engine uses."""
+    import random
+
+    import duckdb
+    import pyarrow as pa
+
+    from pyspark.sql import functions as F
+
+    from bigdatacw1_spark.operators.relational import decimal_units
+
+    rng = random.Random(20240917)
+    common = [1.005, 2.675, 0.125, 2.5, -2.5, 0.5, -0.5, 1.5, -1.005, -2.675, 0.0, -0.0, None]
+    for _ in range(600):
+        price = rng.randint(90_000, 10_500_000) / 100.0
+        disc = rng.randint(0, 10) / 100.0
+        tax = rng.randint(0, 8) / 100.0
+        common += [price, price * (1 - disc), price * (1 - disc) * (1 + tax), -price * disc]
+    common += [rng.uniform(-1e4, 1e4) for _ in range(600)]
+    rows = []
+    for s in (0, 2, 4, 6, 8):
+        edge = 2.0**53 / 10**s
+        near = [edge * (1 + k * 1e-16) for k in range(-8, 9)] + [edge / 2 + 0.5 / 10**s, -edge]
+        near += [math.nextafter(edge, 0.0), math.nextafter(edge, math.inf)]
+        rows += [(s, x) for x in common + near]
+    df = spark.createDataFrame(
+        [(i, s, x) for i, (s, x) in enumerate(rows)], "id long, s int, x double"
+    )
+    units = F.coalesce(*[F.when(F.col("s") == s, decimal_units("x", s)) for s in (0, 2, 4, 6, 8)])
+    got = {r.id: r.u for r in df.select("id", units.alias("u")).collect()}
+
+    con = duckdb.connect()
+    con.register("t", pa.table({
+        "id": list(range(len(rows))),
+        "s": [s for s, _ in rows],
+        "x": pa.array([x for _, x in rows], pa.float64()),
+    }))
+    want = {}
+    for s in (0, 2, 4, 6, 8):
+        sql = f"SELECT id, CAST(x AS DECIMAL(30,{s})) FROM t WHERE s = {s}"
+        for i, d in con.execute(sql).fetchall():
+            want[i] = None if d is None else int(d.scaleb(s))
+    assert len(want) == len(rows)
+    bad = [(rows[i], got[i], want[i]) for i in want if got[i] != want[i]]
+    assert not bad, bad[:10]
 
 
 def test_twap_weights_by_holding_time(spark):
