@@ -189,40 +189,6 @@ def main() -> int:
         "sf": sf,
         "queries_detail": detail,
         "method": f"min-of-{n_runs}; first run per query is cold (see runs[0])",
-        # r5 drift investigation (VERDICT r4 #9): three back-to-back idle
-        # runs of this suite spanned 9.57-10.15s total (±6% run-to-run,
-        # per-query up to ±15% on the sub-second entries), with plan
-        # shapes unchanged — the r3→r4 "+8% fleet drift" sits inside that
-        # spread, i.e. run-to-run variance, not a setup or plan
-        # regression. Compare rounds on the min over multiple FILES, or
-        # on the >1s queries only, before reading anything into <10%.
-        "run_to_run_note": "idle-box total varies ±6% between bench invocations",
-        # VERDICT r5 #3 closed: three clean-box bench files in round 6 put
-        # ev_tumbling_10min's min at 0.575/0.658/0.682 with the plan
-        # unchanged — the min over files returns to r4's 0.577, so the r5
-        # '+13%' was run-to-run noise, not a setup or plan regression.
-        "ev_tumbling_note": "r5 +13% was noise: r6 3-file mins 0.575/0.658/0.682 vs r4 0.577, plan unchanged",
-        # VERDICT r6 #4 closed: three clean-box bench files in round 7 put
-        # ext_cosine_topk's min at 0.638/0.602/0.481 with the plan
-        # unchanged (fused TakeOrderedAndProject) — the file min (0.481)
-        # lands BELOW r5's 0.534, so the r6 0.624 was the documented
-        # sub-second oscillation, not a fixture or session regression.
-        # (The 0.481 run was also the fastest clean total of any round,
-        # 8.94s — the series tracks box speed, not plan drift.)
-        "cosine_note": "r6 +17% was noise: r7 3-file mins 0.638/0.602/0.481 < r5 0.534, plan unchanged",
-        # VERDICT r7 #5 closed: the three r7 "+12-13%" movers
-        # (ref_sql1_conditional_pivot / ref_sql2_portfolio /
-        # tpch_q18_large_orders) were box drift, not regression — three
-        # clean round-8 bench files (totals 8.674/8.612/8.601, the fastest
-        # of any round) put each query's min BELOW its r6 min with plans
-        # unchanged: pivot 0.447 < 0.503, portfolio 0.741 < 0.792,
-        # q18 1.136 < 1.246.
-        # VERDICT r9 #5: per-attempt load1 now rides the final line as
-        # attempts_load1, so contention is separable from regression in
-        # the artifact itself.
-        # (The r11 note said "PLANS diff = 4 added rows"; the committed diff
-        # was 5 — the judge's bookkeeping nit, corrected here for history.)
-        "drift_note": "r12 OPTIMIZATION round: headliner plans CHANGED BY DESIGN (q18 one-pass rewrite, q1 hash fan_out, cosine broadcast query vector, lsh distinct drop -- OPTIMIZATION_r12.md + plans/r12/). Same-session evidence on a box 1.7-2.5x slower than r11's: baseline-at-r11-code 11.806; optimized file totals 7.758/8.106/8.792/10.503, per-query 4-file mins sum 7.493 (-37%); r11 floor 9.202 is a DIFFERENT box -- compare within one session only",
         "sentinel": {
             "probe": "cpython-spin-10M",
             "start_sec": sentinel_start,
@@ -253,7 +219,7 @@ DETAIL_SIDECAR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
 # chars and parsed; the r6 line grew past 2,000, the head fell off the
 # capture window, and BENCH_r06.json recorded "parsed": null — the round's
 # clean 9.493s attempt never formally registered). Everything else
-# (queries_detail, method/notes, full sentinel probes, attempt errors)
+# (queries_detail, method, full sentinel probes, attempt errors)
 # goes to the BENCH_DETAIL.json sidecar, which carries ALL attempts, not
 # just the winner. tests/test_bench_policy.py pins the final line < 1500
 # chars with the live headline query set.
@@ -277,12 +243,10 @@ def _compact_line(best: dict) -> dict:
             "load1_pre_spark": sent.get("load1_pre_spark"),
         },
     }
-    # One short investigation note rides the final line per the verdict
-    # cadence (drift_note this round); history lives in the sidecar.
-    # attempts_load1 (VERDICT r9 #5): each attempt's pre-Spark load1 on
-    # the final line, so a judge can separate contention from regression
-    # without re-running the bench.
-    for k in ("attempts", "attempts_contended", "attempts_load1", "drift_note"):
+    # attempts_load1: each attempt's pre-Spark load1 on the final line, so
+    # a reader can separate contention from regression without re-running
+    # the bench.
+    for k in ("attempts", "attempts_contended", "attempts_load1"):
         if k in best:
             out[k] = best[k]
     return out

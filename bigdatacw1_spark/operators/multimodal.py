@@ -1,9 +1,12 @@
 """Multimodal column plumbing (north-star extension, SURVEY.md §2.11).
 
 Media (image/audio/video) are opaque ``binary`` columns plus a typed
-metadata struct. The Spark-side plumbing — schemas, partition-sized Arrow
-batches through ``mapInPandas``, deterministic pass-through of keys — is
-real and tested. These codecs decode FOR REAL with the stdlib alone:
+metadata struct. Every per-row stage — the ``synth_*_corpus`` fixture
+builders, the decoders and the crawl-container explosions in
+sources/formats.py — is one row function handed to ``map_rows``, the
+single Python/Arrow boundary: partition-sized Arrow batches in, the
+rows the function yields out, keys passed through. These codecs decode
+FOR REAL with the stdlib alone:
 ``decode_png`` (zlib inflate + filter reversal), ``decode_gif`` (full
 LZW), ``decode_bmp``, ``decode_jpeg`` (baseline DCT, gray + color),
 ``decode_wav`` (RIFF chunk walk + 16-bit PCM) and ``decode_flac``
@@ -32,15 +35,16 @@ libsndfile/minimp3 and libheif; every downstream operator (decimate,
 spectral, VAD, features) already consumes the decoded-PCM/pixel
 interface, so the swap is local to the dispatcher.
 
-Scale notes: mapInPandas streams Arrow record batches (no per-row Python
-cost, bounded memory via spark.sql.execution.arrow.maxRecordsPerBatch);
-feature extraction parallelizes per input partition — repartition by a
-key (e.g. doc_id) upstream if the source files skew.
+Scale notes: map_rows streams Arrow record batches (bounded memory via
+spark.sql.execution.arrow.maxRecordsPerBatch; the codec, not the
+boundary, dominates the per-row cost); feature extraction parallelizes
+per input partition — repartition by a key (e.g. doc_id) upstream if the
+source files skew.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
@@ -49,6 +53,40 @@ from pyspark.sql import types as T
 
 if TYPE_CHECKING:  # pandas only needed executor-side inside the UDF
     import pandas as pd
+
+
+def map_rows(df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: T.StructType | str) -> DataFrame:
+    """Call ``fn(*row)`` on every row of ``df`` in a Python worker and
+    emit the rows it returns — zero, one or many tuples per input row,
+    in ``schema``'s column order — as one Arrow batch per input batch.
+
+    Built on ``mapInArrow``: columns reach ``fn`` through
+    ``to_pylist`` and leave through ``pa.array`` typed by Spark's own
+    ``to_arrow_schema(schema)``, so every value stays exact (a nullable
+    BIGINT never passes through pandas' float64) and no per-type dtype
+    table lives here. Every column of ``df`` crosses the boundary:
+    project it to the columns ``fn`` reads first."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def batches(it):
+        import pyarrow as pa
+
+        for batch in it:
+            rows = [out for row in zip(*(c.to_pylist() for c in batch.columns)) for out in fn(*row)]
+            cols = list(zip(*rows)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+            )
+
+    return df.mapInArrow(batches, schema)
+
+
+#: (doc_id, payload) — the row shape of every synthetic media corpus.
+PAYLOAD_SCHEMA = "doc_id long, payload binary"
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -261,7 +299,7 @@ def _fake_feature_vec(payload: bytes, dim: int = 8) -> list[float]:
     partitions. Rounding uses the cross-engine floor pattern
     (operators/relational.stable_round) rather than Python's
     round-half-even so an SQL oracle can reproduce the values bit-for-bit
-    — the plumbing under test is mapInPandas, not the fake arithmetic."""
+    — the plumbing under test is map_rows, not the fake arithmetic."""
     import math
 
     n = len(payload)
@@ -276,71 +314,6 @@ def _fake_feature_vec(payload: bytes, dim: int = 8) -> list[float]:
     return feats
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "media_meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                ]
-            ),
-        ),
-    ]
-)
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_payload", T.BinaryType()),
-    ]
-)
-
-
-def resize_media(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Binary→binary media transform (the resize shape): 1 row in, 1 row
-    out, payload rewritten, metadata updated with the target dimensions.
-    The codec is STUBBED deterministically (payload truncated/cycled to
-    width*height bytes standing in for a decoded-resized-reencoded
-    image); the Arrow batch plumbing and schema evolution are real."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        target = width * height
-
-        def fake_resize(b: bytes) -> bytes:
-            b = bytes(b)
-            if not b:
-                return bytes(target)
-            reps = (target // len(b)) + 1
-            return (b * reps)[:target]
-
-        for pdf in it:
-            out = pdf["payload"].map(fake_resize)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": out,
-                    "media_meta": [
-                        {"mime": "image/raw", "n_bytes": len(p), "width": width, "height": height}
-                        for p in out
-                    ],
-                }
-            )
-
-    # §4.1: ship only the columns the function reads — the new
-    # media_meta is CONSTRUCTED inside the batch fn, so the input
-    # struct would cross the Arrow boundary for nothing.
-    return media.select("doc_id", "payload").mapInPandas(batches, schema=RESIZED_SCHEMA)
-
-
 def resize_png_images(media: DataFrame, width: int, height: int) -> DataFrame:
     """REAL image resize (no codec library): decode_png → exact integer
     nearest-neighbor resample → encode_png re-encode, all inside one
@@ -349,81 +322,32 @@ def resize_png_images(media: DataFrame, width: int, height: int) -> DataFrame:
     synthetic corpus whose pixel (x, y, c) is an arithmetic function the
     RESIZED pixels are the same function at the mapped indices — a SQL
     oracle can replay the whole decode→resample→re-encode round trip
-    exactly (ext_mm_resize). Upgrades the deterministic-fake
-    resize_media: that one keeps the 1-in-1-out plumbing shape for
-    arbitrary payloads; this one is the real PNG path."""
+    exactly (ext_mm_resize)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def resize(doc_id: int, payload: bytes):
+        w0, h0, ch, px = decode_png(payload)
+        buf = bytearray()
+        for j in range(height):
+            row_base = (j * h0 // height) * w0
+            for i in range(width):
+                base = (row_base + i * w0 // width) * ch
+                buf += px[base : base + ch]
+        yield doc_id, encode_png(width, height, ch, bytes(buf))
 
-        for pdf in it:
-            ids, payloads = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w0, h0, ch, px = decode_png(bytes(payload))
-                buf = bytearray()
-                for j in range(height):
-                    sy = j * h0 // height
-                    row_base = sy * w0
-                    for i in range(width):
-                        base = (row_base + i * w0 // width) * ch
-                        buf += px[base : base + ch]
-                ids.append(doc_id)
-                payloads.append(encode_png(width, height, ch, bytes(buf)))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return media.select("doc_id", "payload").mapInPandas(
-        batches, schema="doc_id long, payload binary"
-    )
-
-
-def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Frame sampling (the 1→N video shape): each payload expands to
-    ``n_frames`` output rows. The decode is STUBBED (payload split into
-    equal chunks standing in for decoded frames); what is real — and what
-    matters at scale — is the row-expanding mapInPandas plumbing: output
-    cardinality is decided inside the UDF, batches stay Arrow-sized, and
-    downstream operators see ordinary (doc_id, frame_idx) rows."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                step = max(1, len(b) // n_frames)
-                for i in range(n_frames):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    frames.append(b[i * step : (i + 1) * step] or b[-step:])
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": pd.array(idxs, dtype="int32"), "frame_payload": frames}
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(batches, schema=FRAME_SCHEMA)  # §4.1 projection
+    return map_rows(media.select("doc_id", "payload"), resize, PAYLOAD_SCHEMA)
 
 
 def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload column.
 
-    mapInPandas: each Arrow batch arrives as a pandas DataFrame; the
-    output iterator yields frames matching FEATURE_SCHEMA. This is the
+    One map_rows row per payload, matching FEATURE_SCHEMA. This is the
     (b)-tier custom-operator pattern from the build contract — used when
     no built-in expression can express the computation."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd  # executor-side import
+    def features(doc_id: int, payload: bytes):
+        yield doc_id, len(payload), _fake_feature_vec(payload, dim)
 
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "features": pdf["payload"].map(lambda b: _fake_feature_vec(bytes(b), dim)),
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(batches, schema=FEATURE_SCHEMA)  # §4.1 projection
+    return map_rows(media.select("doc_id", "payload"), features, FEATURE_SCHEMA)  # §4.1 projection
 
 
 SNIFF_SCHEMA = T.StructType(
@@ -523,27 +447,13 @@ def sniff_media_meta(media: DataFrame, payload_col: str = "payload", id_col: str
     runs over the whole corpus before any expensive decode/feature stage
     (filter 'images wider than X' / 'audio at 16 kHz' on header fields,
     THEN pay decode only on survivors — the mandatory triage order at
-    100 TB). Arrow-batched mapInPandas; parsing is ``_sniff_one`` (real
+    100 TB). Arrow-batched map_rows; parsing is ``_sniff_one`` (real
     header arithmetic, see its docstring)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def sniff(doc_id: int, payload: bytes):
+        yield (doc_id, *_sniff_one(payload), len(payload))
 
-        for pdf in it:
-            metas = [_sniff_one(bytes(p)) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "mime": [m[0] for m in metas],
-                    "width": pd.array([m[1] for m in metas], dtype="Int32"),
-                    "height": pd.array([m[2] for m in metas], dtype="Int32"),
-                    "sample_rate": pd.array([m[3] for m in metas], dtype="Int32"),
-                    "n_channels": pd.array([m[4] for m in metas], dtype="Int32"),
-                    "n_bytes": pdf[payload_col].map(len).astype("int64"),
-                }
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=SNIFF_SCHEMA)
+    return map_rows(media.select(id_col, payload_col), sniff, SNIFF_SCHEMA)
 
 
 def synth_media_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -553,27 +463,24 @@ def synth_media_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     with dimensions/rate derived from the id, so an oracle can predict
     every sniffed field from arithmetic alone. Generation runs in the
     same Arrow-batched shape as real binaryFile ingestion."""
+    import struct
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-
-        import pandas as pd
-
-        def make(i: int) -> bytes:
-            kind = i % 3
-            if kind == 0:  # PNG with IHDR
-                w, h = i % 800 + 1, i % 600 + 1
-                return (
-                    b"\x89PNG\r\n\x1a\n"
-                    + struct.pack(">I", 13)
-                    + b"IHDR"
-                    + struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0)
-                )
-            if kind == 1:  # GIF89a logical screen
-                w, h = i % 300 + 1, i % 200 + 1
-                return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00\x00"
+    def make(i: int):
+        kind = i % 3
+        if kind == 0:  # PNG with IHDR
+            w, h = i % 800 + 1, i % 600 + 1
+            yield i, (
+                b"\x89PNG\r\n\x1a\n"
+                + struct.pack(">I", 13)
+                + b"IHDR"
+                + struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0)
+            )
+        elif kind == 1:  # GIF89a logical screen
+            w, h = i % 300 + 1, i % 200 + 1
+            yield i, b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00\x00"
+        else:
             sr = (i % 4 + 1) * 8000  # WAV fmt chunk
-            return (
+            yield i, (
                 b"RIFF"
                 + struct.pack("<I", 36)
                 + b"WAVE"
@@ -581,15 +488,7 @@ def synth_media_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 + struct.pack("<IHHIIHH", 16, 1, i % 2 + 1, sr, sr * 2, 2, 16)
             )
 
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 DECODE_SCHEMA = T.StructType(
@@ -613,28 +512,17 @@ def synth_png_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     zlib IDAT), generated in the same Arrow-batched shape as binaryFile
     ingestion."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        w, h = i % 13 + 4, i % 11 + 4
+        px = bytes(
+            (x + y + i + 85 * c) % 256
+            for y in range(h)
+            for x in range(w)
+            for c in range(3)
+        )
+        yield i, encode_png(w, h, 3, px)
 
-        def make(i: int) -> bytes:
-            w, h = i % 13 + 4, i % 11 + 4
-            px = bytes(
-                (x + y + i + 85 * c) % 256
-                for y in range(h)
-                for x in range(w)
-                for c in range(3)
-            )
-            return encode_png(w, h, 3, px)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 def encode_bmp(width: int, height: int, rgb: bytes) -> bytes:
@@ -698,28 +586,17 @@ def synth_bmp_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the same arithmetic oracle applies; encode_bmp stores them
     bottom-up/BGR/padded, which the decoder must undo exactly."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        w, h = i % 13 + 4, i % 11 + 4
+        px = bytes(
+            (x + y + i + 85 * c) % 256
+            for y in range(h)
+            for x in range(w)
+            for c in range(3)
+        )
+        yield i, encode_bmp(w, h, px)
 
-        def make(i: int) -> bytes:
-            w, h = i % 13 + 4, i % 11 + 4
-            px = bytes(
-                (x + y + i + 85 * c) % 256
-                for y in range(h)
-                for x in range(w)
-                for c in range(3)
-            )
-            return encode_bmp(w, h, px)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 def synth_gif_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -731,25 +608,14 @@ def synth_gif_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     repetitive index pattern compresses properly, so decoding exercises
     the LZW dictionary-growth path, not just root codes."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    palette = [(i * 17, (i * 29) % 256, (i * 53) % 256) for i in range(16)]
 
-        palette = [(i * 17, (i * 29) % 256, (i * 53) % 256) for i in range(16)]
+    def make(i: int):
+        w, h = i % 13 + 4, i % 11 + 4
+        idxs = [(x + y + i) % 16 for y in range(h) for x in range(w)]
+        yield i, encode_gif(w, h, idxs, palette)
 
-        def make(i: int) -> bytes:
-            w, h = i % 13 + 4, i % 11 + 4
-            idxs = [(x + y + i) % 16 for y in range(h) for x in range(w)]
-            return encode_gif(w, h, idxs, palette)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 def decode_images(media: DataFrame, payload_col: str = "payload", id_col: str = "doc_id") -> DataFrame:
@@ -762,36 +628,16 @@ def decode_images(media: DataFrame, payload_col: str = "payload", id_col: str = 
     Both integers, so the cross-engine oracle never compares rounded
     floats. This is the expensive tier of the media triage (run
     sniff_media_meta first, decode only survivors); one task decodes its
-    whole Arrow batch stream with zero per-row Python call overhead
-    beyond the codec itself."""
+    whole Arrow batch stream, and the codec dominates the per-row cost."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def decode(doc_id: int, payload: bytes):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            ids, ws, hs, cs, sums, cks = [], [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, ch, px = decode_image(bytes(payload))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                cs.append(ch)
-                sums.append(int(arr.sum()))
-                cks.append(int((arr * (np.arange(arr.size) + 1)).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": pd.array(ws, dtype="int32"),
-                    "height": pd.array(hs, dtype="int32"),
-                    "n_channels": pd.array(cs, dtype="int32"),
-                    "pixel_sum": pd.array(sums, dtype="int64"),
-                    "pixel_checksum": pd.array(cks, dtype="int64"),
-                }
-            )
+        w, h, ch, px = decode_image(payload)
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        yield doc_id, w, h, ch, int(arr.sum()), int((arr * (np.arange(arr.size) + 1)).sum())
 
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=DECODE_SCHEMA)
+    return map_rows(media.select(id_col, payload_col), decode, DECODE_SCHEMA)
 
 
 def _lzw_encode_gif(indices: list[int], mcs: int) -> bytes:
@@ -1184,23 +1030,12 @@ def synth_alaw_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     laws are directly comparable on identical input. The SQL oracle
     replays the encode→decode quantization over generate_series."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        n = i % 60 + 20
+        samples = [((i * 41 + j * 13) % 65536) - 32768 for j in range(n)]
+        yield i, encode_wav_alaw(8000, 1, samples)
 
-        def make(i: int) -> bytes:
-            n = i % 60 + 20
-            samples = [((i * 41 + j * 13) % 65536) - 32768 for j in range(n)]
-            return encode_wav_alaw(8000, 1, samples)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 def encode_wav_mulaw(sample_rate: int, channels: int, pcm_samples: list[int]) -> bytes:
@@ -1230,23 +1065,12 @@ def synth_mulaw_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     pure integer function of the id — the SQL oracle replays the
     encode→decode quantization arithmetic over generate_series."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        n = i % 60 + 20
+        samples = [((i * 41 + j * 13) % 65536) - 32768 for j in range(n)]
+        yield i, encode_wav_mulaw(8000, 1, samples)
 
-        def make(i: int) -> bytes:
-            n = i % 60 + 20
-            samples = [((i * 41 + j * 13) % 65536) - 32768 for j in range(n)]
-            return encode_wav_mulaw(8000, 1, samples)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 def synth_wav_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1257,24 +1081,13 @@ def synth_wav_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     generate_series predicts abs/square sums and zero-crossing counts
     exactly. Same Arrow-batched generation shape as binaryFile ingestion."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        sr = (i % 4 + 1) * 8000
+        n = i % 50 + 10
+        samples = [((i * 31 + j * 7) % 65536) - 32768 for j in range(n)]
+        yield i, encode_wav(sr, 1, samples)
 
-        def make(i: int) -> bytes:
-            sr = (i % 4 + 1) * 8000
-            n = i % 50 + 10
-            samples = [((i * 31 + j * 7) % 65536) - 32768 for j in range(n)]
-            return encode_wav(sr, 1, samples)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 def decimate_wav(media: DataFrame, factor: int = 2) -> DataFrame:
@@ -1289,22 +1102,13 @@ def decimate_wav(media: DataFrame, factor: int = 2) -> DataFrame:
     if factor < 1:
         raise ValueError("factor must be >= 1")
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def decimate(doc_id: int, payload: bytes):
+        rate, ch, samples = decode_wav(payload)
+        if ch != 1:
+            raise NotImplementedError("decimate_wav: mono PCM only")
+        yield doc_id, encode_wav(rate // factor, ch, samples[::factor])
 
-        for pdf in it:
-            ids, payloads = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, ch, samples = decode_wav(bytes(payload))
-                if ch != 1:
-                    raise NotImplementedError("decimate_wav: mono PCM only")
-                ids.append(doc_id)
-                payloads.append(encode_wav(rate // factor, ch, samples[::factor]))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return media.select("doc_id", "payload").mapInPandas(
-        batches, schema="doc_id long, payload binary"
-    )
+    return map_rows(media.select("doc_id", "payload"), decimate, PAYLOAD_SCHEMA)
 
 
 def decode_audio(media: DataFrame, payload_col: str = "payload", id_col: str = "doc_id") -> DataFrame:
@@ -1319,44 +1123,29 @@ def decode_audio(media: DataFrame, payload_col: str = "payload", id_col: str = "
     survivors. One task decodes its whole Arrow batch stream; the numpy
     reductions are vectorized per payload."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def decode(doc_id: int, payload: bytes):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                # Magic-sniff dispatch: FLAC joins WAV as a REAL decode
-                # path; anything else still refuses loudly inside the
-                # respective decoder.
-                if raw[:4] == b"fLaC":
-                    sr, ch, samples = decode_flac(raw)
-                else:
-                    sr, ch, samples = decode_wav(raw)
-                x = np.asarray(samples, dtype=np.int64)
-                zc = int(np.count_nonzero((x[1:] < 0) != (x[:-1] < 0))) if x.size > 1 else 0
-                rows.append(
-                    (
-                        doc_id,
-                        sr,
-                        ch,
-                        int(x.size),
-                        int(x.size // max(ch, 1)) * 1000 // sr,
-                        int(np.abs(x).sum()),
-                        int((x * x).sum()),
-                        zc,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_channels", "n_samples",
-                    "duration_ms", "abs_sum", "square_sum", "zero_crossings",
-                ],
-            )
+        # Magic-sniff dispatch: FLAC joins WAV as a REAL decode path;
+        # anything else still refuses loudly inside the respective decoder.
+        if payload[:4] == b"fLaC":
+            sr, ch, samples = decode_flac(payload)
+        else:
+            sr, ch, samples = decode_wav(payload)
+        x = np.asarray(samples, dtype=np.int64)
+        zc = int(np.count_nonzero((x[1:] < 0) != (x[:-1] < 0))) if x.size > 1 else 0
+        yield (
+            doc_id,
+            sr,
+            ch,
+            int(x.size),
+            int(x.size // max(ch, 1)) * 1000 // sr,
+            int(np.abs(x).sum()),
+            int((x * x).sum()),
+            zc,
+        )
 
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=AUDIO_SCHEMA)
+    return map_rows(media.select(id_col, payload_col), decode, AUDIO_SCHEMA)
 
 
 SPECTRAL_SCHEMA = T.StructType(
@@ -1380,35 +1169,25 @@ def spectral_features(media: DataFrame, payload_col: str = "payload", id_col: st
     ran correctly (energy conserved) on every row. One numpy FFT per
     payload, vectorized; no per-sample Python."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def spectrum(doc_id: int, payload: bytes):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                sr, ch, samples = decode_wav(bytes(payload))
-                x = np.asarray(samples, dtype=np.float64)
-                n = x.size
-                sumsq = int((np.asarray(samples, dtype=np.int64) ** 2).sum())
-                if n == 0:
-                    rows.append((doc_id, 0, 0, None, True))
-                    continue
-                spec = np.abs(np.fft.rfft(x)) ** 2
-                # one-sided Parseval: double the interior bins
-                energy = spec[0] + spec[-1] * (1 if n % 2 == 0 else 2) + 2 * spec[1:-1].sum()
-                parseval_ok = bool(
-                    abs(energy - n * float(sumsq)) <= 1e-6 * max(n * float(sumsq), 1.0)
-                )
-                freqs = np.fft.rfftfreq(n, d=1.0 / sr)
-                centroid = float((freqs * spec).sum() / spec.sum()) if spec.sum() > 0 else 0.0
-                rows.append((doc_id, n, sumsq, centroid, parseval_ok))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "square_sum", "spectral_centroid_hz", "parseval_ok"],
-            )
+        sr, ch, samples = decode_wav(payload)
+        x = np.asarray(samples, dtype=np.float64)
+        n = x.size
+        sumsq = int((np.asarray(samples, dtype=np.int64) ** 2).sum())
+        if n == 0:
+            yield doc_id, 0, 0, None, True
+            return
+        spec = np.abs(np.fft.rfft(x)) ** 2
+        # one-sided Parseval: double the interior bins
+        energy = spec[0] + spec[-1] * (1 if n % 2 == 0 else 2) + 2 * spec[1:-1].sum()
+        parseval_ok = bool(abs(energy - n * float(sumsq)) <= 1e-6 * max(n * float(sumsq), 1.0))
+        freqs = np.fft.rfftfreq(n, d=1.0 / sr)
+        centroid = float((freqs * spec).sum() / spec.sum()) if spec.sum() > 0 else 0.0
+        yield doc_id, n, sumsq, centroid, parseval_ok
 
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=SPECTRAL_SCHEMA)
+    return map_rows(media.select(id_col, payload_col), spectrum, SPECTRAL_SCHEMA)
 
 
 EMBED_SCHEMA = T.StructType(
@@ -1949,27 +1728,16 @@ def synth_jpeg_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (Huffman, zigzag, dequant, IDCT); gradient round-trip tests cover
     the nonzero-AC path where exactness is replaced by error bounds."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        w, h = (i % 4 + 1) * 8, (i % 3 + 1) * 8
+        px = bytes(
+            2 * ((i * 17 + (y // 8) * 5 + (x // 8) * 11) % 128)
+            for y in range(h)
+            for x in range(w)
+        )
+        yield i, encode_jpeg_gray(w, h, px)
 
-        def make(i: int) -> bytes:
-            w, h = (i % 4 + 1) * 8, (i % 3 + 1) * 8
-            px = bytes(
-                2 * ((i * 17 + (y // 8) * 5 + (x // 8) * 11) % 128)
-                for y in range(h)
-                for x in range(w)
-            )
-            return encode_jpeg_gray(w, h, px)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 def split_mjpeg_frames(payload: bytes) -> list[bytes]:
@@ -2020,37 +1788,24 @@ def decode_video_frames(
     task; the codec cost dominates, exactly as production frame
     extraction behaves."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def decode(doc_id: int, payload: bytes):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                frames = split_mjpeg_frames(bytes(payload))
-                for idx in range(0, len(frames), sample_every):
-                    w, h, _ch, px = decode_jpeg(frames[idx])
-                    arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                    rows.append(
-                        (
-                            doc_id,
-                            idx,
-                            len(frames),
-                            w,
-                            h,
-                            int(arr.sum()),
-                            int((arr * (np.arange(arr.size) + 1)).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "n_frames", "width", "height",
-                    "pixel_sum", "pixel_checksum",
-                ],
+        frames = split_mjpeg_frames(payload)
+        for idx in range(0, len(frames), sample_every):
+            w, h, _ch, px = decode_jpeg(frames[idx])
+            arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+            yield (
+                doc_id,
+                idx,
+                len(frames),
+                w,
+                h,
+                int(arr.sum()),
+                int((arr * (np.arange(arr.size) + 1)).sum()),
             )
 
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=FRAMES_SCHEMA)
+    return map_rows(media.select(id_col, payload_col), decode, FRAMES_SCHEMA)
 
 
 def synth_mjpeg_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2060,30 +1815,19 @@ def synth_mjpeg_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     exactness argument per frame, with the frame index mixed in so a
     frame-order bug breaks the checksum."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def make(i: int) -> bytes:
-            w, h = (i % 2 + 1) * 8, 8
-            out = b""
-            for f in range(i % 3 + 2):
-                px = bytes(
-                    2 * ((i * 17 + f * 29 + (x // 8) * 11) % 128)
-                    for _y in range(h)
-                    for x in range(w)
-                )
-                out += encode_jpeg_gray(w, h, px)
-            return out
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
+    def make(i: int):
+        w, h = (i % 2 + 1) * 8, 8
+        out = b""
+        for f in range(i % 3 + 2):
+            px = bytes(
+                2 * ((i * 17 + f * 29 + (x // 8) * 11) % 128)
+                for _y in range(h)
+                for x in range(w)
             )
+            out += encode_jpeg_gray(w, h, px)
+        yield i, out
 
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 def synth_jpeg_color_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2096,28 +1840,17 @@ def synth_jpeg_color_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     three interleaved components, per-component DC predictors,
     YCbCr→RGB conversion."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        w, h = (i % 3 + 1) * 8, (i % 2 + 1) * 8
+        rgb = bytes(
+            b
+            for y in range(h)
+            for x in range(w)
+            for b in [2 * ((i * 13 + (y // 8) * 7 + (x // 8) * 5) % 128)] * 3
+        )
+        yield i, encode_jpeg_ycbcr444(w, h, rgb)
 
-        def make(i: int) -> bytes:
-            w, h = (i % 3 + 1) * 8, (i % 2 + 1) * 8
-            rgb = bytes(
-                b
-                for y in range(h)
-                for x in range(w)
-                for b in [2 * ((i * 13 + (y // 8) * 7 + (x // 8) * 5) % 128)] * 3
-            )
-            return encode_jpeg_ycbcr444(w, h, rgb)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 def synth_png_phash_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2133,32 +1866,21 @@ def synth_png_phash_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the bytes differ. Every decoded value is a pure function of the id,
     so a SQL oracle replays the whole pipeline arithmetically."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        g, odd = i // 2, i % 2
+        a, b = g % 5 + 1, g % 7 + 1
+        px = bytearray(
+            (x * a + y * b + 85 * c) % 256
+            for y in range(16)
+            for x in range(16)
+            for c in range(3)
+        )
+        if odd:
+            px[0] += 1   # pixel (0,0), R channel: base value 0 -> no wrap
+            px[3] -= 1   # pixel (1,0), R channel: base value a>=1 -> no wrap
+        yield i, encode_png(16, 16, 3, bytes(px))
 
-        def make(i: int) -> bytes:
-            g, odd = i // 2, i % 2
-            a, b = g % 5 + 1, g % 7 + 1
-            px = bytearray(
-                (x * a + y * b + 85 * c) % 256
-                for y in range(16)
-                for x in range(16)
-                for c in range(3)
-            )
-            if odd:
-                px[0] += 1   # pixel (0,0), R channel: base value 0 -> no wrap
-                px[3] -= 1   # pixel (1,0), R channel: base value a>=1 -> no wrap
-            return encode_png(16, 16, 3, bytes(px))
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 PHASH_SCHEMA = T.StructType(
@@ -2187,43 +1909,19 @@ def phash_images(
     all-pairs (same discipline as ext_simhash_pairs). Images must be
     8n×8n so blocks tile exactly; others raise loudly."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def fingerprint(doc_id: int, payload: bytes):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            ids, cols = [], {0: [], 1: [], 2: [], 3: []}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, ch, px = decode_image(bytes(payload))
-                if w % 8 or h % 8:
-                    raise ValueError(f"phash needs 8n×8n images, got {w}×{h}")
-                arr = (
-                    np.frombuffer(px, dtype=np.uint8)
-                    .astype(np.int64)
-                    .reshape(h, w, ch)
-                )
-                inten = arr.sum(axis=2)
-                bh, bw = h // 8, w // 8
-                blocks = inten.reshape(8, bh, 8, bw).sum(axis=(1, 3))
-                flat = blocks.reshape(-1)
-                total = int(flat.sum())
-                bits = (64 * flat > total).astype(np.int64)
-                ids.append(doc_id)
-                for j in range(4):
-                    cols[j].append(
-                        int(sum(int(b) << k for k, b in enumerate(bits[16 * j : 16 * j + 16])))
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "c0": pd.array(cols[0], dtype="int64"),
-                    "c1": pd.array(cols[1], dtype="int64"),
-                    "c2": pd.array(cols[2], dtype="int64"),
-                    "c3": pd.array(cols[3], dtype="int64"),
-                }
-            )
+        w, h, ch, px = decode_image(payload)
+        if w % 8 or h % 8:
+            raise ValueError(f"phash needs 8n×8n images, got {w}×{h}")
+        inten = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, ch).sum(axis=2)
+        flat = inten.reshape(8, h // 8, 8, w // 8).sum(axis=(1, 3)).reshape(-1)
+        bits = (64 * flat > int(flat.sum())).astype(np.int64)
+        chunks = [sum(int(b) << k for k, b in enumerate(bits[16 * j : 16 * j + 16])) for j in range(4)]
+        yield (doc_id, *chunks)
 
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=PHASH_SCHEMA)
+    return map_rows(media.select(id_col, payload_col), fingerprint, PHASH_SCHEMA)
 
 
 def synth_wav_vad_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2236,28 +1934,17 @@ def synth_wav_vad_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     [10³, 10⁶] classify identically, so the oracle replays the frame
     verdicts from the id arithmetic alone."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        samples = []
+        for j in range(200):
+            f = j // 20
+            if (i * 13 + f) % 3 == 0:
+                samples.append((i + j) % 7 - 3)
+            else:
+                samples.append(((i * 31 + j * 7) % 4000) + 500)
+        yield i, encode_wav(8000, 1, samples)
 
-        def make(i: int) -> bytes:
-            samples = []
-            for j in range(200):
-                f = j // 20
-                if (i * 13 + f) % 3 == 0:
-                    samples.append((i + j) % 7 - 3)
-                else:
-                    samples.append(((i * 31 + j * 7) % 4000) + 500)
-            return encode_wav(8000, 1, samples)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 AUDIO_FRAME_SCHEMA = T.StructType(
@@ -2284,33 +1971,16 @@ def audio_frame_energy(
     functions. Integer energies, so the SQL oracle replays them
     exactly."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def frames(doc_id: int, payload: bytes):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            ids, fids, ns, es = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                _sr, _ch, samples = decode_wav(bytes(payload))
-                arr = np.asarray(samples, dtype=np.int64)
-                for f in range(0, len(arr), frame_len):
-                    frame = arr[f : f + frame_len]
-                    ids.append(doc_id)
-                    fids.append(f // frame_len)
-                    ns.append(len(frame))
-                    es.append(int((frame * frame).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_idx": pd.array(fids, dtype="int32"),
-                    "n_samples": pd.array(ns, dtype="int32"),
-                    "energy": pd.array(es, dtype="int64"),
-                }
-            )
+        _sr, _ch, samples = decode_wav(payload)
+        arr = np.asarray(samples, dtype=np.int64)
+        for f in range(0, len(arr), frame_len):
+            frame = arr[f : f + frame_len]
+            yield doc_id, f // frame_len, len(frame), int((frame * frame).sum())
 
-    return media.select(id_col, payload_col).mapInPandas(
-        batches, schema=AUDIO_FRAME_SCHEMA
-    )
+    return map_rows(media.select(id_col, payload_col), frames, AUDIO_FRAME_SCHEMA)
 
 
 def synth_png_letterbox_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2322,29 +1992,18 @@ def synth_png_letterbox_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFra
     arithmetic and any edge-detection off-by-one shows up as a wrong
     width."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        bw_r, bw_c = i % 4, (i // 4) % 4
+        dark = i % 2
+        px = bytearray()
+        for y in range(16):
+            for x in range(16):
+                border = y < bw_r or y >= 16 - bw_r or x < bw_c or x >= 16 - bw_c
+                for c in range(3):
+                    px.append(dark if border else (x * 3 + y * 5 + i + 85 * c) % 200 + 56)
+        yield i, encode_png(16, 16, 3, bytes(px))
 
-        def make(i: int) -> bytes:
-            bw_r, bw_c = i % 4, (i // 4) % 4
-            dark = i % 2
-            px = bytearray()
-            for y in range(16):
-                for x in range(16):
-                    border = y < bw_r or y >= 16 - bw_r or x < bw_c or x >= 16 - bw_c
-                    for c in range(3):
-                        px.append(dark if border else (x * 3 + y * 5 + i + 85 * c) % 200 + 56)
-            return encode_png(16, 16, 3, bytes(px))
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 PROFILE_SCHEMA = T.StructType(
@@ -2367,36 +2026,17 @@ def image_row_col_profile(
     so a SQL oracle replays them exactly; downstream detectors stay in
     JVM aggregations."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def profile(doc_id: int, payload: bytes):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            ids, axes, idxs, sums = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, ch, px = decode_image(bytes(payload))
-                arr = (
-                    np.frombuffer(px, dtype=np.uint8)
-                    .astype(np.int64)
-                    .reshape(h, w, ch)
-                    .sum(axis=2)
-                )
-                for y in range(h):
-                    ids.append(doc_id); axes.append("row"); idxs.append(y)
-                    sums.append(int(arr[y, :].sum()))
-                for x in range(w):
-                    ids.append(doc_id); axes.append("col"); idxs.append(x)
-                    sums.append(int(arr[:, x].sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "axis": axes,
-                    "idx": pd.array(idxs, dtype="int32"),
-                    "intensity_sum": pd.array(sums, dtype="int64"),
-                }
-            )
+        w, h, ch, px = decode_image(payload)
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, ch).sum(axis=2)
+        for y in range(h):
+            yield doc_id, "row", y, int(arr[y, :].sum())
+        for x in range(w):
+            yield doc_id, "col", x, int(arr[:, x].sum())
 
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=PROFILE_SCHEMA)
+    return map_rows(media.select(id_col, payload_col), profile, PROFILE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2892,27 +2532,16 @@ def synth_flac_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     subframe decode path lossless, and the decoder's CRC-8/16 + MD5
     checks run on every payload."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        sr = (i % 3 + 1) * 16000
+        n = i % 60 + 20
+        if i % 5 == 0:
+            samples = [(i * 13) % 65536 - 32768] * n
+        else:
+            samples = [((i * 37 + j * 11) % 65536) - 32768 for j in range(n)]
+        yield i, encode_flac(sr, 1, samples)
 
-        def make(i: int) -> bytes:
-            sr = (i % 3 + 1) * 16000
-            n = i % 60 + 20
-            if i % 5 == 0:
-                samples = [(i * 13) % 65536 - 32768] * n
-            else:
-                samples = [((i * 37 + j * 11) % 65536) - 32768 for j in range(n)]
-            return encode_flac(sr, 1, samples)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 def patchify_images(
@@ -2931,51 +2560,29 @@ def patchify_images(
     checksum Σ byte·(local_index+1) over the patch's canonical
     (dy, dx, c) order, so a wrong stride, tile origin, or channel order
     breaks the value hash while both stay SQL-replayable for synthetic
-    corpora. Arrow-batched mapInPandas like decode_images: one task
+    corpora. Arrow-batched map_rows like decode_images: one task
     patchifies its whole batch stream; the row-explosion factor is
     (w·h)/P² and is bounded by the decode tier's size triage upstream."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def patches(doc_id: int, payload: bytes):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            out: dict[str, list] = {
-                "doc_id": [], "patch_row": [], "patch_col": [],
-                "patch_px_sum": [], "patch_checksum": [],
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, ch, px = decode_image(bytes(payload))
-                arr = (
-                    np.frombuffer(px, dtype=np.uint8)
-                    .astype(np.int64)
-                    .reshape(h, w, ch)
-                )
-                weights = np.arange(patch * patch * ch, dtype=np.int64) + 1
-                for pr in range(h // patch):
-                    for pc in range(w // patch):
-                        tile = arr[
-                            pr * patch : (pr + 1) * patch,
-                            pc * patch : (pc + 1) * patch,
-                            :,
-                        ].reshape(-1)
-                        out["doc_id"].append(doc_id)
-                        out["patch_row"].append(pr)
-                        out["patch_col"].append(pc)
-                        out["patch_px_sum"].append(int(tile.sum()))
-                        out["patch_checksum"].append(int((tile * weights).sum()))
-            yield pd.DataFrame(out)
+        w, h, ch, px = decode_image(payload)
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(h, w, ch)
+        weights = np.arange(patch * patch * ch, dtype=np.int64) + 1
+        for pr in range(h // patch):
+            for pc in range(w // patch):
+                tile = arr[
+                    pr * patch : (pr + 1) * patch,
+                    pc * patch : (pc + 1) * patch,
+                    :,
+                ].reshape(-1)
+                yield doc_id, pr, pc, int(tile.sum()), int((tile * weights).sum())
 
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("patch_row", T.IntegerType()),
-            T.StructField("patch_col", T.IntegerType()),
-            T.StructField("patch_px_sum", T.LongType()),
-            T.StructField("patch_checksum", T.LongType()),
-        ]
+    out_schema = (
+        "doc_id long, patch_row int, patch_col int, patch_px_sum long, patch_checksum long"
     )
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(media.select(id_col, payload_col), patches, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3207,31 +2814,21 @@ def synth_tiff_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     w = id%13+4, h = id%11+4; 3 rows per strip so every image is
     multi-strip and the offset/count arrays live OUTSIDE the IFD."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def make(i: int) -> bytes:
-            w, h = i % 13 + 4, i % 11 + 4
-            if i % 2 == 1:
-                px = bytes(
-                    (3 * x + 5 * y + i + 17 * c) % 256
-                    for y in range(h)
-                    for x in range(w)
-                    for c in range(3)
-                )
-                return encode_tiff(w, h, 3, 1, px)
-            px = bytes((7 * y + i + x // 5) % 256 for y in range(h) for x in range(w))
-            return encode_tiff(w, h, 1, 32773, px)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
+    def make(i: int):
+        w, h = i % 13 + 4, i % 11 + 4
+        if i % 2 == 1:
+            px = bytes(
+                (3 * x + 5 * y + i + 17 * c) % 256
+                for y in range(h)
+                for x in range(w)
+                for c in range(3)
             )
+            yield i, encode_tiff(w, h, 3, 1, px)
+        else:
+            px = bytes((7 * y + i + x // 5) % 256 for y in range(h) for x in range(w))
+            yield i, encode_tiff(w, h, 1, 32773, px)
 
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 def decode_tiff_images(
@@ -3241,28 +2838,15 @@ def decode_tiff_images(
     (Σ px and the position-weighted checksum Σ px·((y·w+x)·spp+c+1),
     the same convention as decode_images so oracles share shape)."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def decode(doc_id: int, payload: bytes):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, spp, comp, px = decode_tiff(bytes(payload))
-                x = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                weights = np.arange(1, x.size + 1, dtype=np.int64)
-                rows.append(
-                    (doc_id, w, h, spp, comp, int(x.sum()), int((x * weights).sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_channels", "compression",
-                    "pixel_sum", "pixel_checksum",
-                ],
-            )
+        w, h, spp, comp, px = decode_tiff(payload)
+        x = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        weights = np.arange(1, x.size + 1, dtype=np.int64)
+        yield doc_id, w, h, spp, comp, int(x.sum()), int((x * weights).sum())
 
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=TIFF_SCHEMA)
+    return map_rows(media.select(id_col, payload_col), decode, TIFF_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3412,32 +2996,21 @@ def synth_qoi_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (generate_series arithmetic), not the codec: a decode that differs
     anywhere changes the channel sums and fails the hash."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def make(i: int) -> bytes:
-            w, h = i % 13 + 4, i % 11 + 4
-            px = bytearray()
-            for j in range(w * h):
-                m = (j // 3) % 6
-                px += bytes(
-                    (
-                        (i * 7 + m) % 256,
-                        (i * 11 + m) % 256,
-                        (i * 13 + m) % 256,
-                    )
+    def make(i: int):
+        w, h = i % 13 + 4, i % 11 + 4
+        px = bytearray()
+        for j in range(w * h):
+            m = (j // 3) % 6
+            px += bytes(
+                (
+                    (i * 7 + m) % 256,
+                    (i * 11 + m) % 256,
+                    (i * 13 + m) % 256,
                 )
-            return encode_qoi(w, h, bytes(px))
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
             )
+        yield i, encode_qoi(w, h, bytes(px))
 
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)
 
 
 QOI_SCHEMA = T.StructType(
@@ -3458,32 +3031,18 @@ def decode_qoi_stats(media: DataFrame, payload_col: str = "payload", id_col: str
     """Arrow-batched QOI decode → integer image statistics (channel sums
     + encoded size), the decode tier of the image triage."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def decode(doc_id: int, payload: bytes):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                w, h, _c, px = decode_qoi(raw)
-                x = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(-1, 3)
-                rows.append(
-                    (
-                        doc_id, w, h, w * h,
-                        int(x[:, 0].sum()), int(x[:, 1].sum()), int(x[:, 2].sum()),
-                        len(raw),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "r_sum", "g_sum", "b_sum", "encoded_bytes",
-                ],
-            )
+        w, h, _c, px = decode_qoi(payload)
+        x = np.frombuffer(px, dtype=np.uint8).astype(np.int64).reshape(-1, 3)
+        yield (
+            doc_id, w, h, w * h,
+            int(x[:, 0].sum()), int(x[:, 1].sum()), int(x[:, 2].sum()),
+            len(payload),
+        )
 
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=QOI_SCHEMA)
+    return map_rows(media.select(id_col, payload_col), decode, QOI_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3644,20 +3203,9 @@ def synth_ima_adpcm_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     encode→decode state machine as a RECURSIVE CTE over (predictor,
     step-index) — the step table joins in as a VALUES relation."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(i: int):
+        n = i % 60 + 20
+        samples = [((i * 37 + j * 257) % 4096) - 2048 for j in range(n)]
+        yield i, encode_wav_ima_adpcm(8000, samples)
 
-        def make(i: int) -> bytes:
-            n = i % 60 + 20
-            samples = [((i * 37 + j * 257) % 4096) - 2048 for j in range(n)]
-            return encode_wav_ima_adpcm(8000, samples)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": [make(int(i)) for i in pdf[id_col]]}
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col), make, PAYLOAD_SCHEMA)

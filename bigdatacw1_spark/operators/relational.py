@@ -171,9 +171,7 @@ def _deterministic_spread_key(df: DataFrame) -> Column | None:
     return F.xxhash64(*cols)
 
 
-def fan_out(
-    df: DataFrame, min_partitions: int | None = None, spread: str = "hash"
-) -> DataFrame:
+def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Raise scan parallelism for CPU-bound row-expanding stages.
 
     A small single-file parquet scan plans as ONE input partition, so a
@@ -199,21 +197,18 @@ def fan_out(
     xxhash64 is full-cardinality, far above the 20-100x distinct-values
     guidance. Rows with map-typed columns (unhashable) keep round-robin.
 
-    Caveat (round-13 ADVICE item): the hash key collocates IDENTICAL
-    rows, so an input with few distinct full rows (e.g. a projected
-    low-cardinality frame) hashes to few partitions and stays
-    under-parallel — exactly what fan_out exists to fix. Every current
-    caller carries a unique id column (doc_id/vec_id), which makes rows
-    distinct by construction; a caller spreading a known-low-distinct
-    keyless expansion should pass ``spread="round_robin"`` to opt back
-    into keyless ``repartition(n)`` (and pay its retry-safety sort)."""
+    Caveat: the hash key collocates IDENTICAL rows, so an input with few
+    distinct full rows (e.g. a projected low-cardinality frame) hashes to
+    few partitions and stays under-parallel — exactly what fan_out exists
+    to fix. Callers must pass rows made distinct by a unique id column
+    (every current caller carries doc_id/vec_id)."""
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
     current = _estimated_scan_partitions(df)
     if current is None:
         current = df.rdd.getNumPartitions()
     if current < target:
-        key = _deterministic_spread_key(df) if spread == "hash" else None
+        key = _deterministic_spread_key(df)
         if key is not None:
             return df.repartition(target, key)
         return df.repartition(target)

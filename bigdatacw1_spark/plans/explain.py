@@ -32,12 +32,15 @@ def has_take_ordered(df: DataFrame) -> bool:
 
 def has_python_eval(df: DataFrame) -> bool:
     """True when the plan contains row-at-a-time Python (BatchEvalPython)
-    or Arrow-batched Python (ArrowEvalPython / MapInPandas / FlatMapGroups
-    variants). Reference-parity queries must return False; extension
-    operators may use the Arrow forms deliberately."""
+    or Arrow-batched Python (ArrowEvalPython / MapInPandas / MapInArrow —
+    every map_rows stage — / FlatMapGroups variants). Reference-parity
+    queries must return False; extension operators may use the Arrow
+    forms deliberately."""
     plan = formatted_plan(df)
     return bool(
-        re.search(r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)
+        re.search(
+            r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas", plan
+        )
     )
 
 

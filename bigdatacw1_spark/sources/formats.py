@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bigdatacw1_spark.operators.multimodal import PAYLOAD_SCHEMA, map_rows
 from bigdatacw1_spark.sources.catalog import TABLES
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -253,7 +254,7 @@ def explode_warc(
     per record, with the body digested (md5) rather than carried — the
     ingestion shape for crawl archives where downstream stages only need
     the response bodies they select by type/uri. One parser call per
-    payload inside mapInPandas; at corpus scale, WARC files are the unit
+    payload inside map_rows; at corpus scale, WARC files are the unit
     of parallelism (binaryFile source), records the unit of work.
 
     ``gzipped=True`` handles the .warc.gz layout Common Crawl actually
@@ -265,33 +266,14 @@ def explode_warc(
     record types you need FIRST — bodies are the heavy column)."""
     import hashlib
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                if gzipped:
-                    raw = gunzip_bounded(raw)
-                for idx, (rtype, uri, body) in enumerate(parse_warc(raw)):
-                    row = (
-                        doc_id,
-                        idx,
-                        rtype,
-                        uri,
-                        len(body),
-                        hashlib.md5(body).hexdigest(),
-                    )
-                    rows.append(row + (body,) if with_body else row)
-            cols = [
-                "doc_id", "rec_idx", "rec_type", "target_uri",
-                "content_len", "content_md5",
-            ] + (["body"] if with_body else [])
-            yield pd.DataFrame(rows, columns=cols)
+    def explode(doc_id: int, payload: bytes):
+        raw = gunzip_bounded(payload) if gzipped else payload
+        for idx, (rtype, uri, body) in enumerate(parse_warc(raw)):
+            row = (doc_id, idx, rtype, uri, len(body), hashlib.md5(body).hexdigest())
+            yield row + (body,) if with_body else row
 
     schema = WARC_BODY_SCHEMA if with_body else WARC_SCHEMA
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=schema)
+    return map_rows(media.select(id_col, payload_col), explode, schema)
 
 
 def synth_warc_corpus(
@@ -307,38 +289,21 @@ def synth_warc_corpus(
     from the documents table alone, so a SQL oracle verifies the parse.
     ``gzipped=True`` emits the Common Crawl .warc.gz layout: each record
     compressed as its own gzip member, members concatenated."""
+    import gzip
 
-    def batches(it):
-        import gzip
+    def one_record(rec) -> bytes:
+        blob = build_warc([rec])
+        return gzip.compress(blob, mtime=0) if gzipped else blob
 
-        import pandas as pd
+    def make(i: int, text: str):
+        recs = [
+            ("warcinfo", None, b"software: bigdatacw1-spark\r\n"),
+            ("response", f"http://example.com/{i}", text.encode("utf-8")),
+            ("metadata", f"http://example.com/{i}", f"doc_id: {i}".encode()),
+        ]
+        yield i, b"".join(one_record(r) for r in recs)
 
-        def one_record(rec) -> bytes:
-            blob = build_warc([rec])
-            return gzip.compress(blob, mtime=0) if gzipped else blob
-
-        def make(i: int, text: str) -> bytes:
-            recs = [
-                ("warcinfo", None, b"software: bigdatacw1-spark\r\n"),
-                ("response", f"http://example.com/{i}", text.encode("utf-8")),
-                ("metadata", f"http://example.com/{i}", f"doc_id: {i}".encode()),
-            ]
-            return b"".join(one_record(r) for r in recs)
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [
-                        make(int(i), t) for i, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col, text_col), make, PAYLOAD_SCHEMA)
 
 
 ZIP_SCHEMA = T.StructType(
@@ -361,23 +326,13 @@ def explode_zip(media: DataFrame, payload_col: str = "payload", id_col: str = "d
     import io
     import zipfile
 
-    def batches(it):
-        import pandas as pd
+    def explode(doc_id: int, payload: bytes):
+        with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+            for name in zf.namelist():
+                body = zf.read(name)
+                yield doc_id, name, len(body), hashlib.md5(body).hexdigest()
 
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
-                    for name in zf.namelist():
-                        body = zf.read(name)
-                        rows.append(
-                            (doc_id, name, len(body), hashlib.md5(body).hexdigest())
-                        )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "member_name", "member_len", "member_md5"]
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(batches, schema=ZIP_SCHEMA)
+    return map_rows(media.select(id_col, payload_col), explode, ZIP_SCHEMA)
 
 
 def synth_zip_corpus(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -385,37 +340,20 @@ def synth_zip_corpus(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     text DEFLATE-compressed under doc.txt plus a stored meta.json —
     member lengths and md5s predictable from the documents table, so
     the oracle verifies the central-directory walk AND the inflate."""
+    import io
+    import zipfile
 
-    def batches(it):
-        import io
-        import zipfile
-
-        import pandas as pd
-
-        def make(i: int, text: str) -> bytes:
-            buf = io.BytesIO()
-            with zipfile.ZipFile(buf, "w") as zf:
-                zf.writestr(
-                    zipfile.ZipInfo("doc.txt"), text.encode("utf-8"),
-                    compress_type=zipfile.ZIP_DEFLATED,
-                )
-                zf.writestr(zipfile.ZipInfo("meta.json"), f'{{"doc_id": {i}}}'.encode())
-            return buf.getvalue()
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": [
-                        make(int(i), t) for i, t in zip(pdf[id_col], pdf[text_col])
-                    ],
-                }
+    def make(i: int, text: str):
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w") as zf:
+            zf.writestr(
+                zipfile.ZipInfo("doc.txt"), text.encode("utf-8"),
+                compress_type=zipfile.ZIP_DEFLATED,
             )
+            zf.writestr(zipfile.ZipInfo("meta.json"), f'{{"doc_id": {i}}}'.encode())
+        yield i, buf.getvalue()
 
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
+    return map_rows(df.select(id_col, text_col), make, PAYLOAD_SCHEMA)
 
 
 def http_response_parts(resp: "F.Column | str"):

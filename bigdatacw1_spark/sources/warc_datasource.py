@@ -1,7 +1,7 @@
 """First-class ``spark.read.format("warc")`` connector via the Python
 DataSource API (Spark 4, SPARK-44076).
 
-The mapInPandas path (sources/formats.explode_warc) treats WARC ingestion
+The map_rows path (sources/formats.explode_warc) treats WARC ingestion
 as a transformation over a pre-loaded binaryFile frame. This module makes
 the crawl container a SOURCE in its own right — the idiomatic Spark 4 way
 to add a format the built-ins lack:

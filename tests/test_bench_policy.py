@@ -70,7 +70,6 @@ def _full_attempt_record(query_names) -> dict:
             n: {"min": 9.9, "mean": 9.9, "runs": [9.9] * 5} for n in query_names
         },
         "method": "x" * 200,
-        "run_to_run_note": "y" * 200,
         "sentinel": {
             "probe": "cpython-spin-10M",
             "start_sec": 99.999,
@@ -85,8 +84,6 @@ def _full_attempt_record(query_names) -> dict:
         "attempts": [99.999, 99.999, 99.999],
         "attempts_contended": [False, True, False],
         "attempts_load1": [99.99, 99.99, 99.99],
-        "cosine_note": "x" * 100,
-        "drift_note": "x" * 210,
     }
 
 

@@ -223,31 +223,21 @@ def test_multimodal_plumbing(spark, docs):
     assert joined.where(F.col("n_bytes") != F.col("nb")).count() == 0
 
 
-def test_multimodal_resize_shape(spark, docs):
-    from bigdatacw1_spark.operators.multimodal import resize_media
+def test_map_rows_is_exact_across_nulls_fan_out_and_empty_partitions(spark):
+    from bigdatacw1_spark.operators.multimodal import map_rows
 
-    media = attach_binary_payload(docs.limit(10))
-    out = resize_media(media, width=8, height=4).collect()
-    assert len(out) == 10
-    for r in out:
-        assert len(r["payload"]) == 8 * 4
-        assert r["media_meta"]["width"] == 8 and r["media_meta"]["height"] == 4
+    big = 2**53 + 1  # the first int64 a float64 cannot hold
+    sc = spark.sparkContext
+    rows = sc.parallelize([(1, 7), (2, big), (3, None)], 1).union(sc.parallelize([], 2))
+    src = spark.createDataFrame(rows, "k long, v long")
+    assert src.rdd.getNumPartitions() == 3  # one batch plus two empty partitions
 
+    def fan(k, v):  # k=1 -> no rows, k=2 -> one, k=3 -> two
+        for i in range(k - 1):
+            yield k, v, i
 
-def test_multimodal_frame_sampling_expands_rows(spark, docs):
-    from bigdatacw1_spark.operators.multimodal import sample_frames
-
-    media = attach_binary_payload(docs.limit(6))
-    frames = sample_frames(media, n_frames=4)
-    rows = frames.collect()
-    assert len(rows) == 6 * 4
-    per_doc = {}
-    for r in rows:
-        per_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
-    assert all(sorted(v) == [0, 1, 2, 3] for v in per_doc.values())
-    # the real codec is an explicit stub
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
+    out = map_rows(src, fan, "k long, v long, i int")
+    assert sorted(tuple(r) for r in out.collect()) == [(2, big, 0), (3, None, 0), (3, None, 1)]
 
 
 def test_word_ngrams_short_docs_empty(spark):
@@ -555,6 +545,8 @@ def test_png_codec_roundtrip_and_filters():
     # non-PNG payloads and unsupported PNG variants fail LOUDLY
     with pytest.raises(NotImplementedError):
         decode_image(b"GIF89a" + bytes(16))
+    with pytest.raises(NotImplementedError):
+        decode_image(b"\x89PNG")  # a truncated signature is no known format
     interlaced = (
         b"\x89PNG\r\n\x1a\n"
         + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 1))

@@ -301,21 +301,6 @@ def test_brute_force_topk_df_enforces_one_row(spark):
     assert len(ids) == len(set(ids)) == 5
 
 
-def test_fan_out_round_robin_opt_out(spark):
-    from bigdatacw1_spark.operators.relational import fan_out
-
-    # a frame with ONE distinct row: hash spread collapses to one
-    # partition; the round_robin opt-out spreads it anyway.
-    one = spark.createDataFrame([(1,)] * 64, "k int").coalesce(1)
-    hashed = fan_out(one)
-    rr = fan_out(one, spread="round_robin")
-    hp = hashed.rdd.glom().map(len).collect()
-    rp = rr.rdd.glom().map(len).collect()
-    assert sum(hp) == sum(rp) == 64
-    assert max(hp) == 64            # hash collocates the identical rows
-    assert max(rp) < 64             # round-robin actually spreads them
-
-
 def test_fan_out_consumers_scan_only_needed_columns(spark):
     """r12 verdict item 5: the fan_out hash spread key hashes every
     column it is given, so an unprojected input widens ReadSchema at
