@@ -102,10 +102,11 @@ def ev_session_30min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ev_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState) in its batch
-    degenerate form: one micro-batch ⇒ the emitted running totals ARE the
-    per-user totals, so the explicit-state fold is oracle-checkable. The
-    cents quantization makes the sum batching-order-independent. The
+    """Custom stateful operator (a keyed fold, applyInPandasWithState on
+    a stream) in its batch degenerate form: one micro-batch ⇒ the emitted
+    running totals ARE the per-user totals, so the explicit-state fold is
+    oracle-checkable. Each row is quantized to cents before the sum, as
+    the oracle does, so the sum does not depend on batching. The
     incremental multi-batch behavior is covered by
     tests/test_streaming.py::test_stateful_running_totals_match_batch."""
     return running_user_totals(_t(spark, sf_dir, "events").select("user_id", "value"))

@@ -3,12 +3,14 @@ operators/warehouse.cdc_materialize.
 
 A change log (I=insert replaces the row, U=sparse update merges non-null
 columns, D=tombstone clears the key, re-insert restarts) arrives as a
-stream; per-key state holds the CURRENT materialized row and each
-micro-batch folds its ops in (ts, tiebreak) order on top of that state,
-emitting the updated row per touched key. Because the CDC fold is a left
-fold over a totally ordered log, batch-prefix + state ≡ whole-log batch
-replay — the equivalence tests/test_streaming.py pins against
-cdc_materialize.
+stream; per-key state (a stateful.keyed_fold) holds the CURRENT
+materialized row and each micro-batch folds its ops in (ts, tiebreak)
+order on top of that state, emitting the updated row per touched key.
+Because the CDC fold is a left fold over a totally ordered log,
+batch-prefix + state ≡ whole-log batch replay — the equivalence
+tests/test_streaming.py pins against cdc_materialize, and
+tests/test_keyed_fold.py pins for a tombstone and re-insert split
+across two batches.
 
 Scale: state is ONE fixed-width row per live key in the executor state
 store (key-hash partitioned — the same shuffle a groupBy would do);
@@ -21,41 +23,24 @@ naturally instead).
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-CDC_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("live", T.BooleanType()),
-        T.StructField("a_cents", T.LongType()),
-        T.StructField("b_cents", T.LongType()),
-        T.StructField("applied_ops", T.LongType()),
-        T.StructField("upd_seq", T.LongType()),
-    ]
-)
+from bigdatacw1_spark.streaming.stateful import keyed_fold
 
-CDC_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("live", T.BooleanType()),
-        T.StructField("a_cents", T.LongType()),
-        T.StructField("b_cents", T.LongType()),
-        T.StructField("applied_ops", T.LongType()),
-        T.StructField("upd_seq", T.LongType()),
-    ]
-)
+CDC_STATE_SCHEMA = "live boolean, a_cents long, b_cents long, applied_ops long, upd_seq long"
+CDC_OUT_SCHEMA = "user_id long, " + CDC_STATE_SCHEMA
+_CDC_COLUMNS = ["user_id", "live", "a_cents", "b_cents", "applied_ops", "upd_seq"]
 
 
-def _fold_ops(state: tuple, pdf: pd.DataFrame) -> tuple:
-    """Pure CDC left fold: apply one batch's ops (already time-ordered)
-    on top of (live, a, b, n). Mirrors cdc_materialize semantics row by
-    row: orphan updates never resurrect a tombstoned key."""
-    live, a, b, n = state
+def _fold_ops(state: tuple | None, pdf: pd.DataFrame) -> tuple:
+    """Pure CDC left fold: apply one batch's ops in (ts, event_id) order
+    on top of (live, a, b, n) and count the batch in upd_seq. Mirrors
+    cdc_materialize semantics row by row: orphan updates never resurrect
+    a tombstoned key."""
+    live, a, b, n, seq = state or (False, None, None, 0, 0)
+    pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
     for op, av, bv in zip(pdf["op"], pdf["a_cents"], pdf["b_cents"]):
         if op == "D":
             live, a, b, n = False, None, None, 0
@@ -70,42 +55,11 @@ def _fold_ops(state: tuple, pdf: pd.DataFrame) -> tuple:
             if not pd.isna(bv):
                 b = int(bv)
             n += 1
-    return live, a, b, n
+    return live, a, b, n, seq + 1
 
 
-def _update_cdc(key, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    live, a, b, n, seq = state.get if state.exists else (False, None, None, 0, 0)
-    batch = pd.concat(list(pdfs), ignore_index=True).sort_values(
-        ["ts", "event_id"], kind="mergesort"
-    )
-    live, a, b, n = _fold_ops((live, a, b, n), batch)
-    seq += 1  # per-key batch counter: max upd_seq row = the final state
-    state.update((live, a, b, n, seq))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "live": [live],
-            "a_cents": [a],
-            "b_cents": [b],
-            "applied_ops": [n],
-            "upd_seq": [seq],
-        }
-    )
-
-
-def _batch_cdc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-    live, a, b, n = _fold_ops((False, None, None, 0), pdf)
-    return pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "live": [live],
-            "a_cents": [a],
-            "b_cents": [b],
-            "applied_ops": [n],
-            "upd_seq": [1],
-        }
-    )
+def _emit_row(key: tuple, state: tuple) -> pd.DataFrame:
+    return pd.DataFrame([(key[0], *state)], columns=_CDC_COLUMNS)
 
 
 def cdc_running_state(log: DataFrame) -> DataFrame:
@@ -113,17 +67,9 @@ def cdc_running_state(log: DataFrame) -> DataFrame:
 
     Input columns: user_id, ts, event_id, op ('I'/'U'/'D'), a_cents,
     b_cents (sparse — null means 'not touched by this op'). Streaming
-    input → applyInPandasWithState (update mode: one row per touched key
-    per batch; the LAST row per key is the final state). Static input →
-    the identical fold as a one-batch applyInPandas, which is what the
+    input emits one row per touched key per batch; upd_seq counts the
+    key's batches, so the max-upd_seq row per key is the final state.
+    Static input is one batch (upd_seq 1), which is what the
     batch-equivalence test compares against cdc_materialize.
     """
-    if log.isStreaming:
-        return log.groupBy("user_id").applyInPandasWithState(
-            _update_cdc,
-            outputStructType=CDC_OUT_SCHEMA,
-            stateStructType=CDC_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    return log.groupBy("user_id").applyInPandas(_batch_cdc, schema=CDC_OUT_SCHEMA)
+    return keyed_fold(log, "user_id", _fold_ops, _emit_row, CDC_STATE_SCHEMA, CDC_OUT_SCHEMA)

@@ -1,9 +1,9 @@
-"""Streaming EWMA with bounded per-key state (applyInPandasWithState).
+"""Streaming EWMA with bounded per-key state (a stateful.keyed_fold).
 
-The streaming twin of operators/timeseries.ewma_last: per key, hold the
-``lookback`` most recent (ts, event_id, value) observations as explicit
-state, and after each micro-batch emit the recomputed EWMA over them.
-Keeping the newest-64 under truncation is merge-safe — an observation
+The streaming twin of operators/timeseries.ewma_last: per key, the fold
+keeps the ``lookback`` most recent (ts, event_id, value) observations as
+explicit state, and the emit recomputes the EWMA over them after each
+micro-batch. Keeping the newest-64 under truncation is merge-safe — an observation
 can only be evicted by 64 newer ones, which themselves survive — so the
 maintained set equals the batch operator's rank-window selection no
 matter how the stream is batched or ordered, and the emitted value
@@ -18,113 +18,50 @@ store viable at 100M keys.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-EWMA_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_obs", T.LongType()),
-        T.StructField("last_ts", T.TimestampType()),
-        T.StructField("ewma", T.DoubleType()),
-    ]
-)
+from bigdatacw1_spark.streaming.stateful import keyed_fold
 
-_EWMA_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("ts_us", T.ArrayType(T.LongType())),
-        T.StructField("eid", T.ArrayType(T.LongType())),
-        T.StructField("vals", T.ArrayType(T.DoubleType())),
-    ]
-)
+EWMA_OUT_SCHEMA = "user_id long, n_obs long, last_ts timestamp, ewma double"
+_EWMA_STATE = "n long, ts_us array<long>, eid array<long>, vals array<double>"
 
 _ALPHA = 0.5
 _LOOKBACK = 64
 
 
-def _fold_ewma(obs: list[tuple[int, int, float]]) -> float:
+def _fold_ewma(state: tuple | None, pdf: pd.DataFrame) -> tuple:
+    """State (n, ts_us, eid, vals): the rows seen, and the newest 64
+    observations as three columns in ascending (ts, event_id) order.
+    Merges this batch's rows into the kept ones and truncates."""
+    n, *cols = state or (0, [], [], [])
+    ts_us = pdf["ts"].astype("datetime64[us]").astype("int64").tolist()
+    new = zip(ts_us, pdf["event_id"].tolist(), pdf["value"].astype(float).tolist())
+    kept = sorted([*zip(*cols), *new])[-_LOOKBACK:]
+    return (n + len(pdf), *map(list, zip(*kept)))
+
+
+def _emit_ewma(key: tuple, state: tuple) -> pd.DataFrame:
     """Ascending left fold seeded with the oldest kept value — the same
     IEEE sequence as ewma_last's F.aggregate and the oracle's
-    LIST_REDUCE."""
-    acc: float | None = None
-    for _, _, v in obs:
-        acc = v if acc is None else acc * (1.0 - _ALPHA) + v * _ALPHA
-    assert acc is not None
-    return math.floor(acc * 10000.0 + 0.5) / 10000.0
-
-
-def _merge(
-    kept: list[tuple[int, int, float]], new: list[tuple[int, int, float]]
-) -> list[tuple[int, int, float]]:
-    merged = sorted(kept + new)
-    return merged[-_LOOKBACK:]
-
-
-def _rows_of(pdf: pd.DataFrame) -> list[tuple[int, int, float]]:
-    ts_us = (pdf["ts"].astype("datetime64[us]").astype("int64")).tolist()
-    return list(zip(ts_us, pdf["event_id"].tolist(), pdf["value"].astype(float).tolist()))
-
-
-def _update_ewma(
-    key: tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        n, ts_l, eid_l, val_l = state.get
-        kept = list(zip(list(ts_l), list(eid_l), list(val_l)))
-    else:
-        n, kept = 0, []
-    new: list[tuple[int, int, float]] = []
-    for pdf in pdf_iter:
-        new.extend(_rows_of(pdf))
-    n += len(new)
-    kept = _merge(kept, new)
-    state.update(
-        (n, [t for t, _, _ in kept], [e for _, e, _ in kept], [v for _, _, v in kept])
-    )
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_obs": [n],
-            "last_ts": [pd.Timestamp(kept[-1][0], unit="us")],
-            "ewma": [_fold_ewma(kept)],
-        }
-    )
-
-
-def _batch_ewma(pdf: pd.DataFrame) -> pd.DataFrame:
-    kept = _merge([], _rows_of(pdf))
-    return pd.DataFrame(
-        {
-            "user_id": [pdf["user_id"].iloc[0]],
-            "n_obs": [len(pdf)],
-            "last_ts": [pd.Timestamp(kept[-1][0], unit="us")],
-            "ewma": [_fold_ewma(kept)],
-        }
-    )
+    LIST_REDUCE — floored to 4 decimals."""
+    n, ts_us, _, vals = state
+    acc = vals[0]
+    for v in vals[1:]:
+        acc = acc * (1.0 - _ALPHA) + v * _ALPHA
+    ewma = math.floor(acc * 10000.0 + 0.5) / 10000.0
+    row = (key[0], n, pd.Timestamp(ts_us[-1], unit="us"), ewma)
+    return pd.DataFrame([row], columns=["user_id", "n_obs", "last_ts", "ewma"])
 
 
 def streaming_ewma(events: DataFrame) -> DataFrame:
-    """Per-user EWMA (alpha=0.5, 64-observation lookback) as a stateful
-    stream operator; on a static frame the identical fold runs as one
-    applyInPandas pass (the degenerate form tests compare against the
-    pure-SQL ewma_last)."""
+    """Per-user EWMA (alpha=0.5, 64-observation lookback) as a keyed
+    fold; on a static frame it is the batch operator that tests compare
+    against the pure-SQL ewma_last."""
     cols = events.select("user_id", "event_id", "ts", "value")
-    if events.isStreaming:
-        return cols.groupBy("user_id").applyInPandasWithState(
-            _update_ewma,
-            outputStructType=EWMA_OUT_SCHEMA,
-            stateStructType=_EWMA_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    return cols.groupBy("user_id").applyInPandas(_batch_ewma, schema=EWMA_OUT_SCHEMA)
+    return keyed_fold(cols, "user_id", _fold_ewma, _emit_ewma, _EWMA_STATE, EWMA_OUT_SCHEMA)
 
 
 def run_ewma_stream_to_memory(spark, events_dir: str, table_name: str = "ewma_out"):

@@ -19,13 +19,11 @@ recovery at all.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdatacw1_spark.operators.warehouse import merge_upsert
+from bigdatacw1_spark.streaming.statefs import delete_dir, dir_exists, rename_dir
 
 
 def apply_changes_to_dimension(
@@ -63,13 +61,15 @@ def run_dimension_merge_stream(
     """Fold a streaming change feed into the parquet dimension at
     ``table_dir`` via per-batch MERGE. The target starts empty if the
     directory does not exist. Returns the StreamingQuery (availableNow:
-    drain the source, then stop)."""
+    drain the source, then stop). ``table_dir`` may be any URI the
+    cluster's Hadoop FileSystem resolves; the swap goes through
+    streaming/statefs."""
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         cols = [key, *set_cols]
-        if os.path.isdir(table_dir):
+        if dir_exists(spark, table_dir):
             target = spark.read.parquet(table_dir).select(*cols)
         else:
             target = spark.createDataFrame([], batch_df.select(*cols).schema)
@@ -78,9 +78,8 @@ def run_dimension_merge_stream(
         )
         tmp = table_dir.rstrip("/") + ".__merge_tmp__"
         merged.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
-        os.rename(tmp, table_dir)
+        delete_dir(spark, table_dir)
+        rename_dir(spark, tmp, table_dir)
 
     return (
         changes_stream.writeStream.foreachBatch(merge_batch)

@@ -1,5 +1,5 @@
 """Filesystem access for the streaming state stores (band store,
-as-of snapshot store).
+as-of snapshot store) and the dimension MERGE sink's table swap.
 
 Driver-side store maintenance — list batch partitions, drop a replayed
 batch's partition before re-probing — previously used os/shutil, which
@@ -53,6 +53,14 @@ def check_store_path(spark: SparkSession, path: str, what: str) -> None:
     _hadoop(spark, path)
 
 
+def dir_exists(spark: SparkSession, path: str) -> bool:
+    """Whether the directory ``path`` exists."""
+    if _is_plain_local(path):
+        return os.path.isdir(path)
+    fs, jpath = _hadoop(spark, path)
+    return bool(fs.exists(jpath))
+
+
 def list_batch_ids(spark: SparkSession, state_dir: str) -> list[int]:
     """Batch ids with a ``batch_id=N`` partition directory in the store
     ([] if the store does not exist yet)."""
@@ -81,3 +89,13 @@ def delete_dir(spark: SparkSession, path: str) -> None:
         fs, jpath = _hadoop(spark, path)
         if fs.exists(jpath):
             fs.delete(jpath, True)
+
+
+def rename_dir(spark: SparkSession, src: str, dst: str) -> None:
+    """Move the directory ``src`` to ``dst``, which must not exist."""
+    if _is_plain_local(src):
+        os.rename(src, dst)
+        return
+    fs, jsrc = _hadoop(spark, src)
+    if not fs.rename(jsrc, spark._jvm.org.apache.hadoop.fs.Path(dst)):
+        raise OSError(f"cannot rename {src!r} to {dst!r}")

@@ -12,95 +12,80 @@ Operator here: per-user top-K values — the "keep the K best offers per
 customer ever seen" shape. State per key is K doubles, bounded by
 construction, so state size is #keys x K regardless of stream length.
 
-The batch degenerate form (one pass, empty initial state) runs the same
-fold through applyInPandas, so the driver's oracle check pins the
-semantics while tests/test_streaming.py checks the incremental path.
+The operator is one fold and one emit. On a stream the processor's
+handleInputRows calls them on each micro-batch against its ValueState;
+on a static frame stateful.keyed_fold runs them in one applyInPandas
+pass, which ev_tws_topk's oracle check pins. tests/test_keyed_fold.py
+runs handleInputRows over a two-batch split with ties at the k
+boundary without Spark; tests/test_streaming.py checks the real
+incremental path where the protobuf package is installed.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
+from bigdatacw1_spark.streaming.stateful import keyed_fold
+
 TOPK_OUT_SCHEMA = "user_id bigint, n_seen bigint, rank int, value double"
+_TOPK_STATE = "n_seen bigint, vals array<double>"
 
 
-def _topk_fold(values: list[float], acc: list[float], k: int) -> list[float]:
-    """Fold new values into a descending top-k accumulator. Pure, so the
-    streaming and batch forms share it."""
-    merged = acc + values
-    merged.sort(reverse=True)
-    return merged[:k]
+def _fold_topk(k: int, state: tuple | None, pdf: pd.DataFrame) -> tuple:
+    """(rows seen, the k largest values in descending order)."""
+    n_seen, acc = state or (0, [])
+    merged = sorted([*acc, *pdf["value"].astype(float).tolist()], reverse=True)
+    return n_seen + len(pdf), merged[:k]
+
+
+def _emit_topk(key: tuple, state: tuple) -> pd.DataFrame:
+    n_seen, acc = state
+    rows = [(key[0], n_seen, rank, v) for rank, v in enumerate(acc, 1)]
+    return pd.DataFrame(rows, columns=["user_id", "n_seen", "rank", "value"])
 
 
 class TopKValuesProcessor(StatefulProcessor):
-    """transformWithState processor: ValueState holds (n_seen, topk
-    array); every batch re-emits the updated top-k rows for keys that
+    """transformWithState processor: ValueState holds the top-k fold's
+    state; every batch re-emits the updated top-k rows for keys that
     received input (Update mode)."""
 
     def __init__(self, k: int = 3) -> None:
-        self.k = k
+        self.fold = partial(_fold_topk, k)
 
     def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("topk", "n_seen bigint, vals array<double>")
+        self._state = handle.getValueState("topk", _TOPK_STATE)
 
     def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        if self._state.exists():
-            n_seen, vals = self._state.get()
-            acc = list(vals)
-        else:
-            n_seen, acc = 0, []
-        for pdf in rows:
-            n_seen += len(pdf)
-            acc = _topk_fold([float(v) for v in pdf["value"]], acc, self.k)
-        self._state.update((n_seen, acc))
-        (user_id,) = key
-        yield pd.DataFrame(
-            {
-                "user_id": [int(user_id)] * len(acc),
-                "n_seen": [n_seen] * len(acc),
-                "rank": list(range(1, len(acc) + 1)),
-                "value": acc,
-            }
-        )
+        prior = self._state.get() if self._state.exists() else None
+        new = self.fold(prior, pd.concat(list(rows), ignore_index=True))
+        self._state.update(new)
+        yield _emit_topk(key, new)
 
     def close(self) -> None:
         pass
 
 
-def _topk_batch(k: int):
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = _topk_fold([float(v) for v in pdf["value"]], [], k)
-        return pd.DataFrame(
-            {
-                "user_id": [int(pdf["user_id"].iloc[0])] * len(acc),
-                "n_seen": [len(pdf)] * len(acc),
-                "rank": list(range(1, len(acc) + 1)),
-                "value": acc,
-            }
-        )
-
-    return fold
-
-
 def topk_per_user(events: DataFrame, k: int = 3) -> DataFrame:
     """Top-k values per user. Streaming: transformWithStateInPandas with
     bounded per-key state (requires the RocksDB state store provider —
-    see run_tws_stream_to_memory). Batch: the same fold over one
-    applyInPandas pass (empty initial state, single batch)."""
-    grouped = events.select("user_id", "value").groupBy("user_id")
+    see run_tws_stream_to_memory). Static: the same fold and emit through
+    keyed_fold's one applyInPandas pass."""
+    cols = events.select("user_id", "value")
     if events.isStreaming:
-        return grouped.transformWithStateInPandas(
+        return cols.groupBy("user_id").transformWithStateInPandas(
             TopKValuesProcessor(k),
             outputStructType=TOPK_OUT_SCHEMA,
             outputMode="Update",
             timeMode="None",
         )
-    return grouped.applyInPandas(_topk_batch(k), schema=TOPK_OUT_SCHEMA)
+    fold = partial(_fold_topk, k)
+    return keyed_fold(cols, "user_id", fold, _emit_topk, _TOPK_STATE, TOPK_OUT_SCHEMA)
 
 
 def run_tws_stream_to_memory(

@@ -1,10 +1,12 @@
 #!/usr/bin/env python
-"""Count the code lines of the Python files under a directory.
+"""Count the code lines of Python files.
 
 A code line carries at least one token that is not a comment, and is not
 part of a module, class or function docstring; blank lines do not count.
+A directory counts every ``*.py`` file under it, a file counts itself,
+and several paths print one sum. A path that does not exist is an error.
 
-Usage: python scripts/code_lines.py [dir]   (default: bigdatacw1_spark)
+Usage: python scripts/code_lines.py [path ...]   (default: bigdatacw1_spark)
 """
 
 from __future__ import annotations
@@ -37,6 +39,19 @@ def code_lines(src: str) -> int:
     return len(lines - docstrings)
 
 
+def python_files(path: Path) -> list[Path]:
+    """The file itself, or every ``*.py`` under a directory."""
+    if path.is_file():
+        return [path]
+    if path.is_dir():
+        return sorted(path.rglob("*.py"))
+    raise FileNotFoundError(f"no such file or directory: {path}")
+
+
 if __name__ == "__main__":
-    root = Path(sys.argv[1] if len(sys.argv) > 1 else "bigdatacw1_spark")
-    print(sum(code_lines(p.read_text()) for p in sorted(root.rglob("*.py"))))
+    roots = [Path(p) for p in sys.argv[1:]] or [Path("bigdatacw1_spark")]
+    try:
+        files = [f for root in roots for f in python_files(root)]
+    except FileNotFoundError as e:
+        sys.exit(f"code_lines.py: {e}")
+    print(sum(code_lines(f.read_text()) for f in files))

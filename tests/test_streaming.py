@@ -528,6 +528,20 @@ def test_dimension_merge_stream_tracks_latest_per_key(spark, tmp_path):
     dimension per micro-batch MERGE ends at the same table a single
     batch argmax produces — update and insert branches both exercised
     because users recur across the time-split files."""
+    _check_dimension_merge_stream(spark, tmp_path, str(tmp_path / "dim"))
+
+
+def test_dimension_merge_stream_with_file_uri(spark, tmp_path):
+    """The same MERGE stream into a file:// table URI: the sink's
+    exists/delete/rename go through the Hadoop FileSystem branch of
+    streaming/statefs, and no temp directory is left behind."""
+    import os
+
+    _check_dimension_merge_stream(spark, tmp_path, "file://" + str(tmp_path / "dim"))
+    assert sorted(os.listdir(tmp_path)) == ["dim", "dim_chk", "feed"]
+
+
+def _check_dimension_merge_stream(spark, tmp_path, table_dir):
     import time as _time
 
     from bigdatacw1_spark.streaming.merge_sink import run_dimension_merge_stream
@@ -550,7 +564,6 @@ def test_dimension_merge_stream_tracks_latest_per_key(spark, tmp_path):
         F.col("value").alias("last_value"),
         F.col("event_id").alias("last_event"),
     )
-    table_dir = str(tmp_path / "dim")
     q = run_dimension_merge_stream(
         spark, changes, table_dir,
         key="user_id", ts_col="last_ts",
